@@ -3,7 +3,8 @@
 The driver's verify runs ``entry(spark)`` as a smoke check, runs
 each ``queries()[name]`` at sf=0.01 and compares it against the
 matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
-order-insensitive value-hash → CORRECTNESS_r{N}.json).
+order-insensitive value-hash).  ``tools/check_oracle.py`` and
+``tests/test_queries_oracle.py`` run the same comparison locally.
 
 The real implementation lives in ``encodesrv_spark/``; this module is a
 thin adapter over its query registry (encodesrv_spark/plans/registry.py).

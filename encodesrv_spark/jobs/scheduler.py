@@ -49,7 +49,11 @@ def _upsert_with_retry(
     pinned to a snapshot version directory that the store's commit GC
     (retain=2) deletes under exactly the races that trigger retries —
     re-executing it on attempt 2 would then throw FileNotFoundError
-    instead of retrying.  localCheckpoint severs that lineage."""
+    instead of retrying.  localCheckpoint severs that lineage.
+
+    ``DataFrame.unpersist`` is a no-op on a checkpointed frame (it is
+    not in the cache manager), so the checkpoint's RDD is released
+    directly once the commit is written or abandoned."""
     updates = updates.localCheckpoint(eager=True)
     try:
         for _ in range(max_retries):
@@ -60,7 +64,7 @@ def _upsert_with_retry(
                 continue
         raise CommitConflict(f"upsert of {cols} lost {max_retries} races")
     finally:
-        updates.unpersist()
+        updates._jdf.queryExecution().logical().rdd().unpersist(False)
 
 
 @dataclass
@@ -110,40 +114,48 @@ class Scheduler:
         claimed = state.rewrite_mounts(candidates, self.cfg.mount_prefix)
         # cache: claimed feeds the execution stage and the result joins
         claimed = claimed.cache()
-        if claimed.count() == 0:
-            claimed.unpersist()
-            return None
+        results = None
+        try:
+            if claimed.count() == 0:
+                return None
 
-        # J1: broadcast FK join to formats, NULL→'' coalesce done by
-        # the argv layer; repartition so each job row is its own task
-        # unit (the Spark analog of the reference's thread pool, ST8)
-        with_fmt = claimed.join(
-            F.broadcast(self.formats), claimed.format_id == self.formats.id_fmt
-        ).repartition(max(free_slots, 1), "id")
-        if self.cfg.fair_pools:
-            from encodesrv_spark.jobs.pools import run_claimed_by_pool
+            # J1: broadcast FK join to formats, NULL→'' coalesce done by
+            # the argv layer; repartition so each job row is its own task
+            # unit (the Spark analog of the reference's thread pool, ST8)
+            with_fmt = claimed.join(
+                F.broadcast(self.formats), claimed.format_id == self.formats.id_fmt
+            ).repartition(max(free_slots, 1), "id")
+            if self.cfg.fair_pools:
+                from encodesrv_spark.jobs.pools import run_claimed_by_pool
 
-            results = run_claimed_by_pool(with_fmt, self.process_cfg).cache()
-        else:
-            results = run_claimed_jobs(with_fmt, self.process_cfg).cache()
-        results.count()  # materialize before the store mutates
+                results = run_claimed_by_pool(with_fmt, self.process_cfg).cache()
+            else:
+                results = run_claimed_jobs(with_fmt, self.process_cfg).cache()
+            results.count()  # materialize before the store mutates
 
-        # terminal status upserts (S8 sink), conflict-retried: another
-        # server's racing claim commit must not drop our Done/Error rows
-        _upsert_with_retry(
-            self.jobs,
-            results.select("id", F.col("final_status").alias("status")),
-            ["status"],
-        )
-        # video_files publish (J2/S11)
-        if self.video_files is not None:
-            vf_updates = state.video_files_updates(
-                results.filter(F.col("final_status").isin("Done", "Encoded"))
+            # terminal status upserts (S8 sink), conflict-retried: another
+            # server's racing claim commit must not drop our Done/Error rows
+            _upsert_with_retry(
+                self.jobs,
+                results.select("id", F.col("final_status").alias("status")),
+                ["status"],
             )
-            if vf_updates.count():
-                _upsert_with_retry(self.video_files, vf_updates, ["is_enabled", "size"])
-        claimed.unpersist()
-        return results
+            # video_files publish (J2/S11)
+            if self.video_files is not None:
+                vf_updates = state.video_files_updates(
+                    results.filter(F.col("final_status").isin("Done", "Encoded"))
+                )
+                if vf_updates.count():
+                    _upsert_with_retry(self.video_files, vf_updates, ["is_enabled", "size"])
+            return results
+        except BaseException:
+            # on success the caller owns `results`; a failed cycle must
+            # not leave it pinned (loop() retries, so leaks would pile up)
+            if results is not None:
+                results.unpersist()
+            raise
+        finally:
+            claimed.unpersist()
 
     def loop(self, max_cycles: int) -> None:
         """The daemon loop with backoff + watchdog (ST6).  `max_cycles`

@@ -1603,7 +1603,11 @@ def repeated_ngram_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # extra (h, doc_id) exchange over the whole shingle stream).  The
     # only way count(*) could differ is two distinct shingles of ONE
     # document colliding in xxhash64 — the same 2^-64 event class the
-    # hashed index already accepts across documents.
+    # hashed index already accepts across documents.  It also assumes
+    # doc_id is unique in `documents`: array_distinct works per ROW, so
+    # two rows sharing a doc_id would repeat (doc_id, h) pairs and
+    # inflate df against the oracle's count(DISTINCT doc_id).
+    # tests/test_optimizations_r11.py asserts the pair distinctness.
     census = idx.groupBy("h").agg(F.count("*").alias("df"))
     shared = F.when(F.col("df") >= 2, 1).otherwise(0)
     return (

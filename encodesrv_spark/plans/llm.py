@@ -1595,8 +1595,7 @@ def embedding_ivfpq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     the composed FAISS-style index (coarse cells prune the corpus read,
     PQ codes shrink what's read to m bytes/vector).  Composes the
     verified `embedding_ivf_ann` cell machinery with the verified
-    `embedding_pq_*` codebook; registered after the driver's sample
-    window so the parity+LLM-core first-50 ordering is unchanged."""
+    `embedding_pq_*` codebook."""
     prep(spark)
     return similarity.ivfpq_ann(
         load_table(spark, sf_dir, "embeddings"),

@@ -23,7 +23,7 @@ def test_cms_sketch_from_frequency_table_is_equivalent(spark, sf_dir):
     sum(exact_n) over the token-frequency table must produce the exact
     (r, cell, n) rows the direct count over the raw token stream
     produces."""
-    toks = load_table(spark, sf_dir, "documents").select(
+    toks = dedup.fan_out(load_table(spark, sf_dir, "documents")).select(
         F.explode(_tokens_ne()).alias("tok")
     )
     cells = F.array(*[H.seeded_hash64("tok", i) % _CMS_W for i in range(_CMS_D)])

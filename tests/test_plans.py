@@ -23,48 +23,6 @@ def plan_of(spark, sf_dir, name: str) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-# The 15 SURVEY §2 reference-parity queries, pinned to the head of the
-# registry so every driver window re-evidences them (frozen since r01).
-PARITY_PINNED = [
-    "poll_topk",
-    "claim_join",
-    "ownership_like",
-    "status_message",
-    "coalesce_defaults",
-    "path_functions",
-    "template_argv",
-    "loudness_gain",
-    "printf_pattern",
-    "progress_pct",
-    "running_jobs_list",
-    "crash_reset",
-    "pass_explode",
-    "date_math",
-    "bot_parse",
-]
-
-
-def test_driver_window_composition():
-    """The driver's correctness gate samples the FIRST 50 registry
-    entries, so window composition is a deliverable, not an accident
-    (VERDICT r05 missing #2): this pins it so a registry edit cannot
-    silently rotate a parity query out of the window or push an
-    oracle-less query into a hard-gate slot."""
-    from encodesrv_spark.plans.registry import _HOISTED
-
-    window = list(QUERIES)[:50]
-    # 15 pinned parity queries lead, in their frozen order
-    assert window[:15] == PARITY_PINNED
-    # then every hoisted query, in _HOISTED order, inside the window
-    assert len(_HOISTED) <= 35, "hoisted set overflows the 50-slot window"
-    assert window[15 : 15 + len(_HOISTED)] == list(_HOISTED)
-    # no duplicates anywhere in the window
-    assert len(set(window)) == 50
-    # and every slot is a hard gate: oracle-backed, rows+schema+hash
-    unbacked = [n for n in window if QUERIES[n].oracle is None]
-    assert not unbacked, f"oracle-less queries occupy gate slots: {unbacked}"
-
-
 def test_poll_topk_is_take_ordered(spark, sf_dir):
     """T1 must compile to distributed top-k (per-partition heap +
     merge), never a global sort."""

@@ -281,6 +281,40 @@ def test_terminal_upsert_retries_through_commit_conflict(spark, tmp_path):
     assert not any(s == f"{SRV} - Waiting" for s in statuses.values())
 
 
+def test_failed_terminal_upsert_releases_cached_frames(spark, tmp_path):
+    """A cycle whose terminal upsert loses every CAS race raises, and
+    must release what it persisted (claimed, results and the upsert's
+    checkpoint): loop() retries failed cycles, so anything left pinned
+    would pile up."""
+    from encodesrv_spark.jobs import scheduler as sched_mod
+    from encodesrv_spark.jobs.state import CommitConflict
+
+    jobs, vf = seed_stores(spark, tmp_path)
+    sched = mk_scheduler(spark, tmp_path, jobs, vf)
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    real_upsert = jobs.upsert
+
+    def always_conflict(*a, **k):
+        raise CommitConflict("simulated racing commit")
+
+    orig = sched_mod.state.claim_jobs
+
+    def claim_then_patch(*a, **k):
+        out = orig(*a, **k)
+        jobs.upsert = always_conflict
+        return out
+
+    before = persistent().size()
+    sched_mod.state.claim_jobs = claim_then_patch
+    try:
+        with pytest.raises(CommitConflict):
+            sched.run_cycle()
+    finally:
+        jobs.upsert = real_upsert
+        sched_mod.state.claim_jobs = orig
+    assert persistent().size() == before
+
+
 def test_two_real_writers_claim_exactly_once(spark, tmp_path):
     """Two REAL threads drain one store through the optimistic-commit
     protocol (no simulated conflicts): every job is claimed by exactly

@@ -23,8 +23,7 @@ def main() -> None:
         f"{len(qs)} registered queries (generated by"
         " `python tools/gen_query_index.py`; run one with"
         " `python -m encodesrv_spark query <name>`)."
-        " Ordering below = registry order: the driver's correctness"
-        " gate samples the first 50.",
+        " Ordering below = registration order.",
         "",
         "| # | query | module | tags | what it does |",
         "|---|---|---|---|---|",
