@@ -20,24 +20,28 @@ weighted share of executor slots and a ``minShare`` floor, so urgent
 encodes start immediately even while a wide low-priority band is
 running — at 1000 executors this is the difference between "priority"
 meaning claim order only and meaning end-to-end latency.  Under the
-default FIFO mode the pool property is simply ignored, so the dispatch
-degrades gracefully to the unpooled behavior and is safe to enable
-unconditionally.
+default FIFO mode the pool property is simply ignored.  This is the
+scheduler's only execution path; a single-band batch, the common case,
+costs one action.
 
 PySpark's pinned-thread mode (default since 3.2) maps each Python
 thread to its own JVM thread, so per-thread ``setLocalProperty`` is
-exactly the per-action isolation the FAIR scheduler expects.
+exactly the per-action isolation the FAIR scheduler expects.  Bands
+run in :class:`pyspark.InheritableThread` so they keep the caller's
+local properties, its job group included.
 """
 
 from __future__ import annotations
 
 import logging
-import threading
 from collections.abc import Callable
+from functools import reduce
 
+from pyspark import InheritableThread
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from encodesrv_spark.jobs import state
 from encodesrv_spark.jobs.process import ProcessConfig, run_claimed_jobs
 
 log = logging.getLogger(__name__)
@@ -51,42 +55,14 @@ POOLS: dict[str, tuple[int, int]] = {
     "ef-low": (1, 0),
 }
 
-_HIGH_THRESHOLD = 2  # ef_priority >= 2 -> high, 1 -> normal, else low
-
-# The banding rule, stated ONCE: first floor an ef_priority meets wins;
-# NULL / below-every-floor lands in the default pool.  Both the scalar
-# (tests, docs) and the Column (production routing) forms derive from
-# this table, so the rule cannot drift between them.
-_BANDS: tuple[tuple[int, str], ...] = (
-    (_HIGH_THRESHOLD, "ef-high"),
-    (1, "ef-normal"),
-)
-_DEFAULT_POOL = "ef-low"
-
 
 def pool_for(ef_priority: int | None) -> str:
-    """Band an ``ef_priority`` value into a scheduler pool name.
-    NULL (formats predating the column) lands in the low band, matching
-    the reference's behavior of giving unprioritized work no boost."""
-    if ef_priority is not None:
-        for floor, name in _BANDS:
-            if ef_priority >= floor:
-                return name
-    return _DEFAULT_POOL
-
-
-def pool_column(df: DataFrame) -> DataFrame:
-    """Tag each claimed row with its execution pool (the same
-    :data:`_BANDS` table as :func:`pool_for`, as a codegen'd
-    conditional — no UDF)."""
-    if "ef_priority" not in df.columns:
-        return df.withColumn("__pool", F.lit(_DEFAULT_POOL))
-    p = F.col("ef_priority")
-    col = None
-    for floor, name in _BANDS:
-        cond, lit = p >= floor, F.lit(name)
-        col = F.when(cond, lit) if col is None else col.when(cond, lit)
-    return df.withColumn("__pool", col.otherwise(F.lit(_DEFAULT_POOL)))
+    """Band an ``ef_priority`` value into a scheduler pool name:
+    >= 2 high, 1 normal, anything else low.  NULL (formats predating
+    the column) lands in the low band, matching the reference's
+    behavior of giving unprioritized work no boost."""
+    p = -1 if ef_priority is None else ef_priority
+    return "ef-high" if p >= 2 else "ef-normal" if p >= 1 else "ef-low"
 
 
 def allocation_xml() -> str:
@@ -116,44 +92,39 @@ def write_allocation_file(path: str) -> str:
 def run_claimed_by_pool(
     claimed_with_format: DataFrame,
     cfg: ProcessConfig,
-    probe: Callable[[str, str | None], None] | None = None,
+    tasks: int = 1,
+    probe: Callable[[str, str | None, str | None], None] | None = None,
 ) -> DataFrame:
     """Execute a claimed batch with per-priority-band FAIR dispatch.
 
-    Splits the batch into its non-empty pools and runs each band's
-    `run_claimed_jobs` action from its own thread with
-    ``spark.scheduler.pool`` set, so the FAIR scheduler arbitrates
-    executor slots BETWEEN the bands while every band makes progress
-    concurrently.  Results are the exact union of the unpooled path
-    (asserted in tests/test_fair_pools.py).
+    The batch (<= max_concurrent rows) is held on the driver once
+    (:func:`state.hold`) and banded there with :func:`pool_for`; only
+    bands that hold rows are dispatched.  Each band's
+    `run_claimed_jobs` action runs from its own
+    :class:`pyspark.InheritableThread` with ``spark.scheduler.pool``
+    set, so the FAIR scheduler arbitrates executor slots BETWEEN the
+    bands while every band makes progress concurrently.  A band's input
+    is repartitioned by ``id`` into `tasks` tasks so each job is its
+    own task unit (the Spark analog of the reference's thread pool,
+    ST8), and its output is held too: re-reading the returned frame
+    never re-runs an encode.
 
-    ``probe`` (tests): called in each worker thread with
-    ``(pool_name, sc.getLocalProperty("spark.scheduler.pool"))`` right
-    before the action, witnessing the thread-local wiring.
+    ``probe`` (tests): called in each band thread with ``(pool_name,
+    sc.getLocalProperty("spark.scheduler.pool"),
+    sc.getLocalProperty("spark.jobGroup.id"))`` right before the
+    action, witnessing the thread-local wiring.
 
-    The claimed frame is checkpointed once so the band filters re-scan
-    a materialized batch (≤ max_concurrent rows), not the claim MERGE
-    lineage; only bands that actually hold rows are dispatched, so the
-    common single-priority micro-batch costs one action, not three.
-
-    Failure semantics match the unpooled path: a band whose ACTION
-    dies (infra failure — per-job ffmpeg errors surface as 'Error'
-    rows, not exceptions) aborts the cycle, and the watchdog /
-    crash-reset path re-queues the in-flight jobs.  Every failed
-    band's error is logged with its pool name before the first is
-    re-raised, so a multi-band failure cannot hide its root cause."""
-    spark = claimed_with_format.sparkSession
-    src = pool_column(claimed_with_format).localCheckpoint(eager=True)
-    sc = spark.sparkContext
-
-    # driver-side scalar over the ≤ max_concurrent-row checkpointed
-    # batch (documented .collect() convention): which bands have work?
-    active = {
-        r["__pool"] for r in src.select("__pool").distinct().collect()
-    }
-    to_run = [pool for pool in POOLS if pool in active]
-    if not to_run:  # empty claim batch: preserve unpooled schema/result
-        return run_claimed_jobs(src.drop("__pool"), cfg)
+    A band whose ACTION dies (infra failure — per-job ffmpeg errors
+    surface as 'Error' rows, not exceptions) aborts the cycle, and the
+    watchdog / crash-reset path re-queues the in-flight jobs.  Every
+    failed band's error is logged with its pool name before the first
+    is re-raised, so a multi-band failure cannot hide its root cause."""
+    src = state.hold(claimed_with_format)
+    sc = src.sparkSession.sparkContext
+    prio = "ef_priority" if "ef_priority" in src.columns else F.lit(None)
+    bands: dict[str, list[int]] = {}
+    for r in src.select("id", prio).collect():  # local: no Spark job
+        bands.setdefault(pool_for(r[1]), []).append(r[0])
 
     results: dict[str, DataFrame] = {}
     errors: dict[str, BaseException] = {}
@@ -162,19 +133,20 @@ def run_claimed_by_pool(
         sc.setLocalProperty("spark.scheduler.pool", pool)
         try:
             if probe is not None:
-                probe(pool, sc.getLocalProperty("spark.scheduler.pool"))
-            band = src.filter(F.col("__pool") == pool).drop("__pool")
+                probe(
+                    pool,
+                    sc.getLocalProperty("spark.scheduler.pool"),
+                    sc.getLocalProperty("spark.jobGroup.id"),
+                )
+            band = src.filter(F.col("id").isin(bands[pool])).repartition(tasks, "id")
             # the ACTION must run in this thread for the pool to apply
-            results[pool] = run_claimed_jobs(band, cfg).localCheckpoint(
-                eager=True
-            )
+            results[pool] = state.hold(run_claimed_jobs(band, cfg))
         except BaseException as exc:  # surfaced to the caller below
             errors[pool] = exc
-        finally:
-            sc.setLocalProperty("spark.scheduler.pool", None)
 
+    to_run = [pool for pool in POOLS if pool in bands]
     threads = [
-        threading.Thread(target=run_band, args=(pool,), name=f"pool-{pool}")
+        InheritableThread(run_band, args=(pool,), name=f"pool-{pool}")
         for pool in to_run
     ]
     for t in threads:
@@ -185,8 +157,4 @@ def run_claimed_by_pool(
         for pool, exc in errors.items():
             log.error("band %s failed: %s", pool, exc, exc_info=exc)
         raise next(iter(errors.values()))
-
-    out: DataFrame | None = None
-    for pool in to_run:
-        out = results[pool] if out is None else out.unionAll(results[pool])
-    return out
+    return reduce(DataFrame.unionAll, (results[pool] for pool in to_run))

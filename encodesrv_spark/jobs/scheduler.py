@@ -5,7 +5,9 @@ Maps the reference's daemon loop (encodesrv/__init__.py:54-141) onto
 Spark:
 
 * threads + queue.Queue      → Spark task scheduling over the claimed
-                               batch (repartition spreads jobs over cores)
+                               batch, one weighted FAIR pool per
+                               ef_priority band (jobs/pools.py);
+                               repartition spreads jobs over cores
 * per-row UPDATE statements  → keyed upserts on the JobStore
 * 60 s sleep / 300 s backoff → injectable clock+sleeper (testable);
                                the Structured Streaming twin uses
@@ -17,6 +19,12 @@ poll — at most one per minute.  That throttle is an artifact of its
 single-queue design (SURVEY §7.3.3); here the claim limit is
 `max_concurrent - in_flight`, preserving the backpressure *intent*
 (never over-claim) without the accidental 1/min ceiling.
+
+A cycle handles at most `max_concurrent` rows, so every frame it must
+not recompute — the claimed batch, the band inputs and the results — is
+held on the driver as a local frame (`state.hold`): nothing to cache,
+checkpoint or release, and nothing pinned to a snapshot that a racing
+commit's GC may delete.
 """
 
 from __future__ import annotations
@@ -30,7 +38,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from encodesrv_spark.jobs import state
-from encodesrv_spark.jobs.process import ProcessConfig, run_claimed_jobs
+from encodesrv_spark.jobs.pools import run_claimed_by_pool
+from encodesrv_spark.jobs.process import ProcessConfig
 from encodesrv_spark.jobs.state import CommitConflict, JobStore
 
 
@@ -45,26 +54,19 @@ def _upsert_with_retry(
     The upsert re-reads the current snapshot per attempt and publish
     is idempotent, so retrying is safe.
 
-    `updates` is materialized once up front: its lazy plan may be
-    pinned to a snapshot version directory that the store's commit GC
-    (retain=2) deletes under exactly the races that trigger retries —
-    re-executing it on attempt 2 would then throw FileNotFoundError
-    instead of retrying.  localCheckpoint severs that lineage.
-
-    ``DataFrame.unpersist`` is a no-op on a checkpointed frame (it is
-    not in the cache manager), so the checkpoint's RDD is released
-    directly once the commit is written or abandoned."""
-    updates = updates.localCheckpoint(eager=True)
-    try:
-        for _ in range(max_retries):
-            try:
-                store.upsert(updates, cols)
-                return
-            except CommitConflict:
-                continue
-        raise CommitConflict(f"upsert of {cols} lost {max_retries} races")
-    finally:
-        updates._jdf.queryExecution().logical().rdd().unpersist(False)
+    `updates` is held on the driver once up front (`state.hold`): its
+    lazy plan may be pinned to a snapshot version directory that the
+    store's commit GC (retain=2) deletes under exactly the races that
+    trigger retries — re-executing it on attempt 2 would then throw
+    FileNotFoundError instead of retrying."""
+    updates = state.hold(updates)
+    for _ in range(max_retries):
+        try:
+            store.upsert(updates, cols)
+            return
+        except CommitConflict:
+            continue
+    raise CommitConflict(f"upsert of {cols} lost {max_retries} races")
 
 
 @dataclass
@@ -75,11 +77,6 @@ class SchedulerConfig:
     poll_interval_s: float = 60.0
     backoff_s: float = 300.0
     watchdog: timedelta = timedelta(days=1)
-    # execute each claimed batch as per-ef_priority-band concurrent
-    # actions pinned to weighted FAIR pools (jobs/pools.py) — on a
-    # FAIR-mode cluster high-priority encodes get weighted executor
-    # share; under FIFO it degrades to the unpooled behavior
-    fair_pools: bool = False
 
 
 @dataclass
@@ -96,66 +93,50 @@ class Scheduler:
     def startup_reset(self) -> int:
         """ST5 crash recovery: my in-flight, non-Error rows →
         'Not Encoding'."""
-        updates = state.crash_reset_updates(self.jobs.read(), self.cfg.server)
-        n = updates.count()
+        updates = state.hold(
+            state.crash_reset_updates(self.jobs.read(), self.cfg.server)
+        )
+        n = len(updates.collect())  # held: no Spark job
         if n:
             _upsert_with_retry(self.jobs, updates, ["status"])
         return n
 
     def run_cycle(self, free_slots: int | None = None) -> DataFrame | None:
         """One poll→claim→execute→publish micro-batch.  Returns the
-        result frame (or None when nothing was claimed)."""
+        result frame, held on the driver (or None when nothing was
+        claimed)."""
         if free_slots is None:
             free_slots = self.cfg.max_concurrent
         # exactly-once claim: conditional MERGE + optimistic CAS commit,
         # retried on conflict — safe even with multiple servers polling
         # the same store (ST3, SURVEY §7.3.1)
-        candidates = state.claim_jobs(self.jobs, self.cfg.server, free_slots)
-        claimed = state.rewrite_mounts(candidates, self.cfg.mount_prefix)
-        # cache: claimed feeds the execution stage and the result joins
-        claimed = claimed.cache()
-        results = None
-        try:
-            if claimed.count() == 0:
-                return None
+        claimed = state.claim_jobs(self.jobs, self.cfg.server, free_slots)
+        if claimed.isEmpty():
+            return None
+        claimed = state.rewrite_mounts(claimed, self.cfg.mount_prefix)
 
-            # J1: broadcast FK join to formats, NULL→'' coalesce done by
-            # the argv layer; repartition so each job row is its own task
-            # unit (the Spark analog of the reference's thread pool, ST8)
-            with_fmt = claimed.join(
-                F.broadcast(self.formats), claimed.format_id == self.formats.id_fmt
-            ).repartition(max(free_slots, 1), "id")
-            if self.cfg.fair_pools:
-                from encodesrv_spark.jobs.pools import run_claimed_by_pool
+        # J1: broadcast FK join to formats, NULL→'' coalesce done by the
+        # argv layer; executed per ef_priority band (ST8)
+        with_fmt = claimed.join(
+            F.broadcast(self.formats), claimed.format_id == self.formats.id_fmt
+        )
+        results = run_claimed_by_pool(with_fmt, self.process_cfg, max(free_slots, 1))
 
-                results = run_claimed_by_pool(with_fmt, self.process_cfg).cache()
-            else:
-                results = run_claimed_jobs(with_fmt, self.process_cfg).cache()
-            results.count()  # materialize before the store mutates
-
-            # terminal status upserts (S8 sink), conflict-retried: another
-            # server's racing claim commit must not drop our Done/Error rows
-            _upsert_with_retry(
-                self.jobs,
-                results.select("id", F.col("final_status").alias("status")),
-                ["status"],
+        # terminal status upserts (S8 sink), conflict-retried: another
+        # server's racing claim commit must not drop our Done/Error rows
+        _upsert_with_retry(
+            self.jobs,
+            results.select("id", F.col("final_status").alias("status")),
+            ["status"],
+        )
+        # video_files publish (J2/S11)
+        if self.video_files is not None:
+            vf_updates = state.video_files_updates(
+                results.filter(F.col("final_status").isin("Done", "Encoded"))
             )
-            # video_files publish (J2/S11)
-            if self.video_files is not None:
-                vf_updates = state.video_files_updates(
-                    results.filter(F.col("final_status").isin("Done", "Encoded"))
-                )
-                if vf_updates.count():
-                    _upsert_with_retry(self.video_files, vf_updates, ["is_enabled", "size"])
-            return results
-        except BaseException:
-            # on success the caller owns `results`; a failed cycle must
-            # not leave it pinned (loop() retries, so leaks would pile up)
-            if results is not None:
-                results.unpersist()
-            raise
-        finally:
-            claimed.unpersist()
+            if not vf_updates.isEmpty():
+                _upsert_with_retry(self.video_files, vf_updates, ["is_enabled", "size"])
+        return results
 
     def loop(self, max_cycles: int) -> None:
         """The daemon loop with backoff + watchdog (ST6).  `max_cycles`

@@ -312,6 +312,21 @@ class JobStore:
         self._commit(joined.select(*out_cols), expected_version=expected_version)
 
 
+def hold(df: DataFrame) -> DataFrame:
+    """Run `df` once and hold its rows on the driver as an Arrow-backed
+    local frame.  The result is a ``LocalRelation``: reading it again
+    runs no Spark job, starts no Python worker and needs no release,
+    and it no longer depends on the snapshot directories `df` read,
+    which a racing commit's GC may delete.  A frame that already
+    optimizes to a ``LocalRelation`` (e.g. a projection of a held
+    frame) is returned as is.  For small frames only: a cycle's claim
+    batch (``<= max_concurrent`` rows) or a server's in-flight rows."""
+    plan = df._jdf.queryExecution().optimizedPlan()
+    if plan.getClass().getSimpleName() == "LocalRelation":
+        return df
+    return df.sparkSession.createDataFrame(df.toArrow())
+
+
 def claim_jobs(
     store: JobStore, server: str, limit: int, max_retries: int = 5
 ) -> DataFrame:
@@ -320,16 +335,17 @@ def claim_jobs(
     claim them with a conditional update pinned to that snapshot's
     version.  A racing server triggers :class:`CommitConflict`; retry
     re-reads and claims only what is still free — two servers can
-    never own the same job.  Returns the claimed candidate rows."""
+    never own the same job.  Returns the claimed candidate rows, held
+    on the driver (:func:`hold`), so they stay readable after a later
+    commit GCs the snapshot they were polled from."""
     for _ in range(max_retries):
         v0 = store.current_version()
-        snapshot = store._read_snapshot(v0)
-        candidates = poll_candidates(snapshot, limit)
+        candidates = hold(poll_candidates(store._read_snapshot(v0), limit))
         # empty poll = drained queue: return without committing — an
         # empty upsert would still write a full new version (pure
         # write amplification, and under contention it steals the CAS
-        # from a writer with real claims)
-        if not candidates.limit(1).count():
+        # from a writer with real claims).  No Spark job on a held frame.
+        if candidates.isEmpty():
             return candidates
         try:
             store.upsert(

@@ -3,17 +3,15 @@ generalization: claimed batches split into ef_priority bands, each
 band's action pinned to a weighted scheduler pool.
 
 What is assertable on the shared (FIFO) test session: the banding, the
-thread-local pool-property wiring, the allocation file, and that the
-pooled path produces EXACTLY the unpooled results.  The weighted
-sharing itself is the Spark FAIR scheduler's contract once
+thread-local pool-property wiring, the caller's job group reaching every
+band, the allocation file, and that a two-band cycle finishes every job.
+The weighted sharing itself is the Spark FAIR scheduler's contract once
 spark.scheduler.mode=FAIR + the generated allocation file are set at
 session build (documented in the module docstring)."""
 
 from __future__ import annotations
 
 import xml.etree.ElementTree as ET
-
-import pytest
 
 from pyspark.sql import functions as F
 
@@ -60,10 +58,11 @@ def test_allocation_file_matches_pools(tmp_path):
 
 def test_band_routing_and_thread_property_wiring(spark, monkeypatch):
     """Each band must execute in a thread whose scheduler-pool local
-    property names its pool, and rows must route to the band their
-    ef_priority maps to.  The execution stage is stubbed to TAG each
-    row with the property its thread observes — so the assertion
-    covers exactly the wiring FAIR scheduling depends on."""
+    property names its pool and whose job group is the caller's, and
+    rows must route to the band their ef_priority maps to.  The
+    execution stage is stubbed to TAG each row with the property its
+    thread observes — so the assertion covers exactly the wiring FAIR
+    scheduling depends on."""
     sc = spark.sparkContext
 
     def tagging_stub(df, cfg):
@@ -76,10 +75,18 @@ def test_band_routing_and_thread_property_wiring(spark, monkeypatch):
         [(1, 2), (2, 1), (3, None), (4, 5), (5, 0)],
         "id long, ef_priority int",
     )
-    seen: dict[str, str | None] = {}
-    out = run_claimed_by_pool(claimed, ProcessConfig(server=SRV), probe=seen.__setitem__)
+    seen: dict[str, tuple[str | None, str | None]] = {}
 
-    assert seen == {p: p for p in POOLS}, "pool property not thread-local"
+    def probe(pool, pool_prop, group):
+        seen[pool] = (pool_prop, group)
+
+    sc.setJobGroup("g", "band wiring")
+    try:
+        out = run_claimed_by_pool(claimed, ProcessConfig(server=SRV), probe=probe)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+    assert seen == {p: (p, "g") for p in POOLS}, "pool or job group not per band"
     routed = {r["id"]: r["final_status"] for r in out.collect()}
     assert routed == {
         1: "ef-high",
@@ -148,35 +155,21 @@ def _seed(spark, root, n_jobs=5):
     return jobs, vf
 
 
-def _run_cycle(spark, root, fair: bool):
-    jobs, vf = _seed(spark, root)
+def test_two_band_cycle_finishes_every_job(spark, tmp_path):
+    """A cycle whose batch spans two bands (ef_priority 2 and 1) ends
+    with every job Done, in the returned results and in the store."""
+    jobs, vf = _seed(spark, tmp_path)
     sched = Scheduler(
         spark=spark,
         jobs=jobs,
         formats=_fmt_rows(spark),
         video_files=vf,
-        process_cfg=ProcessConfig(server=SRV, scratch_root=str(root)),
+        process_cfg=ProcessConfig(server=SRV, scratch_root=str(tmp_path)),
         cfg=SchedulerConfig(
-            server=SRV,
-            mount_prefix=str(root) + "/",
-            max_concurrent=5,
-            fair_pools=fair,
+            server=SRV, mount_prefix=str(tmp_path) + "/", max_concurrent=5
         ),
         sleeper=lambda s: None,
     )
-    results = sched.run_cycle()
-    return (
-        {(r["id"], r["final_status"]) for r in results.collect()},
-        {r["id"]: r["status"] for r in jobs.read().collect()},
-    )
-
-
-def test_fair_cycle_results_equal_unpooled(spark, tmp_path):
-    """Enabling fair_pools must change scheduling only: terminal
-    results and job-store statuses are identical to the unpooled
-    cycle over an identically-seeded store."""
-    plain_res, plain_store = _run_cycle(spark, tmp_path / "plain", fair=False)
-    fair_res, fair_store = _run_cycle(spark, tmp_path / "fair", fair=True)
-    assert fair_res == plain_res and len(fair_res) == 5
-    assert fair_store == plain_store
-    assert all(s == "Done" for _, s in fair_res)
+    results = {r["id"]: r["final_status"] for r in sched.run_cycle().collect()}
+    store = {r["id"]: r["status"] for r in jobs.read().collect()}
+    assert results == store == {i: "Done" for i in range(1, 6)}

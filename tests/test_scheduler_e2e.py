@@ -282,9 +282,9 @@ def test_terminal_upsert_retries_through_commit_conflict(spark, tmp_path):
 
 
 def test_failed_terminal_upsert_releases_cached_frames(spark, tmp_path):
-    """A cycle whose terminal upsert loses every CAS race raises, and
-    must release what it persisted (claimed, results and the upsert's
-    checkpoint): loop() retries failed cycles, so anything left pinned
+    """Neither a cycle whose terminal upsert loses every CAS race (it
+    raises) nor successful cycles run by loop() may leave anything
+    persisted: loop() runs cycles back to back, so anything left pinned
     would pile up."""
     from encodesrv_spark.jobs import scheduler as sched_mod
     from encodesrv_spark.jobs.state import CommitConflict
@@ -312,6 +312,8 @@ def test_failed_terminal_upsert_releases_cached_frames(spark, tmp_path):
     finally:
         jobs.upsert = real_upsert
         sched_mod.state.claim_jobs = orig
+    assert persistent().size() == before
+    sched.loop(max_cycles=3)
     assert persistent().size() == before
 
 

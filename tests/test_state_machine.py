@@ -146,6 +146,20 @@ def test_optimistic_claim_conflict_and_retry(spark, tmp_path):
     assert final[1] == f"{SRV} - Waiting"
 
 
+def test_claimed_rows_survive_gc_of_their_snapshot(spark, tmp_path):
+    """A's claim polls snapshot v0 and commits v1; B's claim commits v2,
+    whose GC (retain=2) deletes v0.  A's claimed rows must still be
+    readable: if they re-read v0 the cycle dies and A's jobs sit in
+    '<server> - Waiting' until the next startup_reset."""
+    store = JobStore(spark, str(tmp_path / "jobs"))
+    store.init(jobs_df(spark))
+    a_claimed = state.claim_jobs(store, SRV, 1)
+    b_claimed = state.claim_jobs(store, OTHER, 1)
+    assert store.history() == [1, 2]
+    assert [r["id"] for r in a_claimed.collect()] == [2]
+    assert [r["id"] for r in b_claimed.collect()] == [7]
+
+
 def test_conditional_upsert_skips_nonmatching_rows(spark, tmp_path):
     """`only_if` gates the MERGE: an update targeting a row whose
     current status no longer matches leaves the row untouched."""
