@@ -81,7 +81,6 @@ class ProcessConfig:
     apply_mp4box: Callable[[str], None] | None = None
     scratch_root: str | None = None
     target_lufs_default: float = -23.0
-    fail_fast: bool = False  # tests: re-raise instead of Error status
     progress_dir: str | None = None  # ST7 side-channel (see emit_progress)
     # per-stage wall-clock bound for the external stages (copy/encode/
     # mp4box).  Hours-long encodes fight Spark's task-retry assumptions
@@ -265,8 +264,6 @@ def run_job_row(row: dict, cfg: ProcessConfig) -> dict:
             "log": ";".join(log),
         }
     except Exception as exc:  # any stage failure → Error status row
-        if cfg.fail_fast:
-            raise
         shutil.rmtree(scratch, ignore_errors=True)
         mark("terminal", f"{cfg.server} - Error")
         return {

@@ -5,9 +5,8 @@ Maps the reference's daemon loop (encodesrv/__init__.py:54-141) onto
 Spark:
 
 * threads + queue.Queue      → Spark task scheduling over the claimed
-                               batch, one weighted FAIR pool per
-                               ef_priority band (jobs/pools.py);
-                               repartition spreads jobs over cores
+                               batch: one action, repartitioned by id
+                               so each job is its own task
 * per-row UPDATE statements  → keyed upserts on the JobStore
 * 60 s sleep / 300 s backoff → injectable clock+sleeper (testable);
                                the Structured Streaming twin uses
@@ -16,15 +15,17 @@ Spark:
 
 Admission control (ST2): the reference claims `1 - qsize` jobs per
 poll — at most one per minute.  That throttle is an artifact of its
-single-queue design (SURVEY §7.3.3); here the claim limit is
-`max_concurrent - in_flight`, preserving the backpressure *intent*
-(never over-claim) without the accidental 1/min ceiling.
+single-queue design (SURVEY §7.3.3).  `run_cycle` is synchronous —
+it finishes every job it claimed before the next poll, so nothing is
+in flight when it polls — and the claim limit is `max_concurrent`,
+preserving the backpressure *intent* (never over-claim) without the
+accidental 1/min ceiling.
 
-A cycle handles at most `max_concurrent` rows, so every frame it must
-not recompute — the claimed batch, the band inputs and the results — is
-held on the driver as a local frame (`state.hold`): nothing to cache,
-checkpoint or release, and nothing pinned to a snapshot that a racing
-commit's GC may delete.
+A cycle handles at most `max_concurrent` rows, so the frames it must
+not recompute — the claimed batch and the results — are held on the
+driver as local frames (`state.hold`): nothing to cache, checkpoint or
+release, and nothing pinned to a snapshot that a racing commit's GC
+may delete.
 """
 
 from __future__ import annotations
@@ -38,8 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from encodesrv_spark.jobs import state
-from encodesrv_spark.jobs.pools import run_claimed_by_pool
-from encodesrv_spark.jobs.process import ProcessConfig
+from encodesrv_spark.jobs.process import ProcessConfig, run_claimed_jobs
 from encodesrv_spark.jobs.state import CommitConflict, JobStore
 
 
@@ -101,26 +101,29 @@ class Scheduler:
             _upsert_with_retry(self.jobs, updates, ["status"])
         return n
 
-    def run_cycle(self, free_slots: int | None = None) -> DataFrame | None:
+    def run_cycle(self) -> DataFrame | None:
         """One poll→claim→execute→publish micro-batch.  Returns the
         result frame, held on the driver (or None when nothing was
         claimed)."""
-        if free_slots is None:
-            free_slots = self.cfg.max_concurrent
+        limit = self.cfg.max_concurrent
         # exactly-once claim: conditional MERGE + optimistic CAS commit,
         # retried on conflict — safe even with multiple servers polling
         # the same store (ST3, SURVEY §7.3.1)
-        claimed = state.claim_jobs(self.jobs, self.cfg.server, free_slots)
+        claimed = state.claim_jobs(self.jobs, self.cfg.server, limit)
         if claimed.isEmpty():
             return None
         claimed = state.rewrite_mounts(claimed, self.cfg.mount_prefix)
 
         # J1: broadcast FK join to formats, NULL→'' coalesce done by the
-        # argv layer; executed per ef_priority band (ST8)
+        # argv layer.  The batch runs as ONE action, repartitioned by id
+        # so each job is its own task (ST8); held so re-reading the
+        # results never re-runs an encode
         with_fmt = claimed.join(
             F.broadcast(self.formats), claimed.format_id == self.formats.id_fmt
         )
-        results = run_claimed_by_pool(with_fmt, self.process_cfg, max(free_slots, 1))
+        results = state.hold(
+            run_claimed_jobs(with_fmt.repartition(limit, "id"), self.process_cfg)
+        )
 
         # terminal status upserts (S8 sink), conflict-retried: another
         # server's racing claim commit must not drop our Done/Error rows

@@ -428,30 +428,23 @@ def bot_status(jobs: DataFrame, server: str) -> BotStatus:
     """The bots' 'status' command (reference logs/bots/common.py:48-80):
     list of this server's running jobs (A3) + waiting count (A1/P5) +
     pluralized message (F5/F14). One two-branch aggregation."""
+    status = F.col("status")
     running = (
-        jobs.filter(
-            F.col("status").contains(server)
-            & ~F.col("status").contains("Error")
-            & (F.col("status") != NOT_ENCODING)
-        )
-        .select(F.col("source_file"))
-        .agg(
-            F.array_join(
-                F.array_sort(
-                    F.collect_list(F.element_at(F.split("source_file", "/"), -1))
-                ),
-                ", ",
-            ).alias("names")
-        )
+        status.contains(server) & ~status.contains("Error") & (status != NOT_ENCODING)
     )
-    waiting_cnt = jobs.filter(
-        (F.col("status") == NOT_ENCODING) | (F.col("status") == "Waiting")
-    ).count()
+    basename = F.element_at(F.split("source_file", "/"), -1)
+    row = jobs.agg(
+        # collect_list skips the NULLs `when` yields for other rows
+        F.array_join(
+            F.array_sort(F.collect_list(F.when(running, basename))), ", "
+        ).alias("names"),
+        F.count_if((status == NOT_ENCODING) | (status == "Waiting")).alias("waiting"),
+    ).collect()[0]
+    names, waiting_cnt = row["names"], row["waiting"]
     # the relay module owns the template + the 'no jobs' idle fallback
     # (reference common.py:59-64) — ONE definition for logger and bots
     from encodesrv_spark.streaming.relays import form_status_message
 
-    names = running.collect()[0]["names"]
     return BotStatus(
         currently_encoding=names or "no jobs",
         waiting_count=waiting_cnt,

@@ -26,6 +26,7 @@ def fmt_df(spark):
         {
             "id_fmt": 1,
             "format_name": "web-hd",
+            "ef_priority": 2,
             "container": "mp4",
             "video_codec": "libx264",
             "video_bitrate": 1_000_000,
@@ -47,6 +48,7 @@ def fmt_df(spark):
         {
             "id_fmt": 2,
             "format_name": "two-pass",
+            "ef_priority": 1,
             "container": "mp4",
             "video_codec": "libx264",
             "video_bitrate": 2_000_000,
@@ -151,12 +153,38 @@ def test_second_cycle_drains_remaining(spark, tmp_path):
 
 
 def test_two_pass_format_runs_two_passes(spark, tmp_path):
+    """A mixed-priority batch (formats with ef_priority 2 and 1) runs
+    in one cycle: every job ends Done, in the results and in the store,
+    and every Spark job the cycle starts stays in the caller's job
+    group (perfbench's per-cycle counters are read per group)."""
     jobs, vf = seed_stores(spark, tmp_path)
     sched = mk_scheduler(spark, tmp_path, jobs, vf, max_concurrent=5)
-    results = sched.run_cycle().collect()
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def marker_job(group: str) -> int:
+        sc.setJobGroup(group, "marker")
+        spark.range(1).collect()
+        return max(tracker.getJobIdsForGroup(group))
+
+    try:
+        first = marker_job("before-cycle")
+        sc.setJobGroup("g", "one scheduler cycle")
+        results = sched.run_cycle().collect()
+        last = marker_job("after-cycle")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # job ids are sequential: the cycle started exactly the jobs
+    # between the two markers, whatever group they landed in
+    cycle_jobs = set(range(first + 1, last))
+    assert cycle_jobs and set(tracker.getJobIdsForGroup("g")) == cycle_jobs
+
     by_id = {r["id"]: r["passes_run"] for r in results}
     assert by_id[2] == 2 and by_id[4] == 2  # format 2 = two-pass
     assert by_id[1] == 1 and by_id[3] == 1
+    store = {r["id"]: r["status"] for r in jobs.read().collect()}
+    status = {r["id"]: r["final_status"] for r in results}
+    assert status == store == {i: "Done" for i in range(1, 6)}
 
 
 def test_failed_job_lands_in_error_and_others_proceed(spark, tmp_path):
