@@ -278,8 +278,10 @@ def run_job_row(row: dict, cfg: ProcessConfig) -> dict:
 
 def run_claimed_jobs(claimed_with_format: DataFrame, cfg: ProcessConfig) -> DataFrame:
     """mapInPandas over claimed jobs (already broadcast-joined to their
-    format row). Repartition by id upstream to spread jobs across
-    executor cores (ST8 — Spark's scheduler replaces the thread pool)."""
+    format row), one task per input partition (ST8 — Spark's scheduler
+    replaces the thread pool).  Give it one job per partition, as the
+    scheduler's held batch is, so each job is its own task and
+    min(jobs, defaultParallelism) encodes run at once."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

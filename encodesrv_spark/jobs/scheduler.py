@@ -5,8 +5,9 @@ Maps the reference's daemon loop (encodesrv/__init__.py:54-141) onto
 Spark:
 
 * threads + queue.Queue      → Spark task scheduling over the claimed
-                               batch: one action, repartitioned by id
-                               so each job is its own task
+                               batch: one action, one task per job, so
+                               min(max_concurrent, defaultParallelism)
+                               jobs run at once
 * per-row UPDATE statements  → keyed upserts on the JobStore
 * 60 s sleep / 300 s backoff → injectable clock+sleeper (testable);
                                the Structured Streaming twin uses
@@ -115,15 +116,16 @@ class Scheduler:
         claimed = state.rewrite_mounts(claimed, self.cfg.mount_prefix)
 
         # J1: broadcast FK join to formats, NULL→'' coalesce done by the
-        # argv layer.  The batch runs as ONE action, repartitioned by id
-        # so each job is its own task (ST8); held so re-reading the
-        # results never re-runs an encode
+        # argv layer.  The batch runs as ONE action (ST8).  The held
+        # batch scans as one row per partition (up to
+        # defaultParallelism) and the broadcast join keeps that, so each
+        # job is its own task; a hash repartition by id would put
+        # colliding ids in one task, one encode after another.  Held so
+        # re-reading the results never re-runs an encode
         with_fmt = claimed.join(
             F.broadcast(self.formats), claimed.format_id == self.formats.id_fmt
         )
-        results = state.hold(
-            run_claimed_jobs(with_fmt.repartition(limit, "id"), self.process_cfg)
-        )
+        results = state.hold(run_claimed_jobs(with_fmt, self.process_cfg))
 
         # terminal status upserts (S8 sink), conflict-retried: another
         # server's racing claim commit must not drop our Done/Error rows

@@ -9,9 +9,9 @@ module reproduces those semantics on Spark:
   single-writer micro-batch discipline (SURVEY.md §7.3.1: the simplest
   model that matches the reference's one-driver reality; swap in Delta
   MERGE for multi-writer).  Every mutation is a keyed upsert producing
-  a new immutable version directory + atomic pointer bump, so readers
-  never observe partial writes (same staging-commit idea as
-  FileOutputCommitter).
+  a new immutable version directory, committed afterwards by an atomic
+  commit record, so readers never observe partial writes (same
+  staging-commit idea as FileOutputCommitter).
 * status vocabulary + transition helpers — exact strings preserved as
   the compatibility surface (reference encodesrv/job.py:78,136,199,230,
   283,304,309,330; encodesrv/__init__.py:78,112).
@@ -21,8 +21,10 @@ module reproduces those semantics on Spark:
 
 from __future__ import annotations
 
+import contextlib
 import os
 import shutil
+import uuid
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -64,21 +66,28 @@ class CommitConflict(Exception):
 
 
 class JobStore:
-    """Versioned-parquet keyed table with atomic pointer commits and
-    optimistic concurrency.
+    """Versioned-parquet keyed table with atomic commits and optimistic
+    concurrency.
 
-    Layout:  <path>/v_{n:08d}/*.parquet  +  <path>/_CURRENT (pointer)
-             +  <path>/_COMMIT_{n:08d} (per-version reservation marker).
+    Layout:  <path>/v_{n:08d}_{id}/*.parquet  (data, one dir per attempt)
+             +  <path>/_COMMIT_{n:08d}  (commit record n: its data dir)
+             +  <path>/_CURRENT  (hint: a recently committed version).
 
-    Each commit first RESERVES its target version by creating the
-    marker with O_EXCL — an atomic filesystem compare-and-swap.  Two
-    writers racing from the same snapshot both target version v+1;
-    exactly one creates the marker, the other gets
+    A commit first writes its data to a directory only this attempt
+    uses, then creates commit record v+1 naming it, atomically and only
+    if absent (``os.link``) -- a filesystem compare-and-swap, and the
+    commit itself.  Two writers racing from the same snapshot both
+    target v+1; exactly one creates the record, the other gets
     :class:`CommitConflict` and retries from the new snapshot.  This is
-    the same optimistic-transaction protocol Delta Lake uses (its
-    _delta_log/N.json creation is the CAS); on a real deployment swap
-    this class for Delta MERGE and the calling code is unchanged.
-    Readers resolve _CURRENT and only ever see fully-written versions.
+    the protocol of Delta Lake's log (its _delta_log/N.json creation is
+    the CAS); on a real deployment swap this class for Delta MERGE and
+    the calling code is unchanged.  Readers resolve the newest record
+    whose data exists, so they only ever see fully written versions.
+
+    A writer killed at any point leaves the store writable: before its
+    record it leaves only a data directory that no record names, which
+    the next commit sweeps; after its record it has committed, and
+    `_CURRENT` is only where readers start looking.
     """
 
     def __init__(
@@ -87,7 +96,7 @@ class JobStore:
         self.spark = spark
         self.path = path
         self.key = key
-        # versions kept behind _CURRENT: >=2 covers concurrent readers;
+        # versions kept, newest included: >=2 covers concurrent readers;
         # raise it for time-travel (`read_version`) / audit windows
         self.retain = max(2, retain)
 
@@ -96,15 +105,55 @@ class JobStore:
     def _pointer(self) -> str:
         return os.path.join(self.path, "_CURRENT")
 
-    def current_version(self) -> int:
+    def _record(self, v: int) -> str:
+        return os.path.join(self.path, f"_COMMIT_{v:08d}")
+
+    def _last_record(self) -> int:
+        """Number of the newest commit record (-1 if none): probe upward
+        from the `_CURRENT` hint.  A missing or torn hint, or one a slow
+        writer set back to a version GC has since removed, falls back to
+        listing the records."""
         try:
             with open(self._pointer()) as f:
-                return int(f.read().strip())
-        except FileNotFoundError:
-            return -1
+                v = int(f.read())
+        except (FileNotFoundError, ValueError):
+            v = -1
+        if v < 0 or not os.path.exists(self._record(v)):
+            try:
+                names = os.listdir(self.path)
+            except FileNotFoundError:
+                return -1
+            v = max(
+                (int(n[len("_COMMIT_"):]) for n in names if n.startswith("_COMMIT_")),
+                default=-1,
+            )
+        while os.path.exists(self._record(v + 1)):
+            v += 1
+        return v
 
-    def _version_dir(self, v: int) -> str:
-        return os.path.join(self.path, f"v_{v:08d}")
+    def _version_dir(self, v: int) -> str | None:
+        """The data directory commit record `v` names, or None when the
+        record is gone or names nothing (a bare reservation left by a
+        reserve-then-write commit)."""
+        try:
+            with open(self._record(v)) as f:
+                name = f.read()
+        except FileNotFoundError:
+            return None
+        return os.path.join(self.path, name) if name else None
+
+    def _has_data(self, v: int) -> bool:
+        d = self._version_dir(v)
+        return d is not None and os.path.isdir(d)
+
+    def _committed_at_or_below(self, v: int) -> int:
+        while v >= 0 and not self._has_data(v):
+            v -= 1
+        return v
+
+    def current_version(self) -> int:
+        """The newest committed version whose data exists (-1 if none)."""
+        return self._committed_at_or_below(self._last_record())
 
     def read(self) -> DataFrame:
         v = self.current_version()
@@ -116,13 +165,12 @@ class JobStore:
         """Time-travel: the table exactly as of commit `v` (must still
         be inside the retention window — the Delta `VERSION AS OF`
         analog; pair with a larger `retain` for audit trails)."""
-        d = self._version_dir(v)
-        if not os.path.isdir(d):
+        if not self._has_data(v):
             raise FileNotFoundError(
                 f"version {v} not retained (retain={self.retain}, "
                 f"current={self.current_version()})"
             )
-        return self.spark.read.parquet(d)
+        return self.spark.read.parquet(self._version_dir(v))
 
     def history(self) -> list[int]:
         """Retained, readable version numbers, oldest first."""
@@ -130,7 +178,7 @@ class JobStore:
         return [
             v
             for v in range(max(0, cur - self.retain + 1), cur + 1)
-            if os.path.isdir(self._version_dir(v))
+            if self._has_data(v)
         ]
 
     def changes(self, from_v: int, to_v: int) -> DataFrame:
@@ -174,9 +222,6 @@ class JobStore:
         )
         return ins.unionByName(dele).unionByName(pre).unionByName(post)
 
-    def _marker(self, v: int) -> str:
-        return os.path.join(self.path, f"_COMMIT_{v:08d}")
-
     def _read_snapshot(self, v: int) -> DataFrame:
         """Read a pinned version for an optimistic write.  If the dir
         was already GC'd by a newer writer's retention sweep the
@@ -186,9 +231,11 @@ class JobStore:
         loop."""
         d = self._version_dir(v)
         try:
+            if d is None:
+                raise FileNotFoundError(self._record(v))
             return self.spark.read.parquet(d)
         except Exception as exc:
-            if not os.path.isdir(d):
+            if d is None or not os.path.isdir(d):
                 raise CommitConflict(
                     f"version {v} GC'd by a newer commit "
                     f"(current={self.current_version()})"
@@ -196,47 +243,57 @@ class JobStore:
             raise
 
     def _commit(self, df: DataFrame, expected_version: int | None = None) -> None:
-        cur = self.current_version()
+        os.makedirs(self.path, exist_ok=True)
+        last = self._last_record()
+        cur = self._committed_at_or_below(last)
         if expected_version is not None and cur != expected_version:
             raise CommitConflict(
                 f"read version {expected_version}, store is at {cur}"
             )
-        v = cur + 1
-        # atomic CAS: O_EXCL marker creation reserves version v for this
-        # writer BEFORE any data is written — the loser never touches
-        # the version directory, so no torn writes
-        os.makedirs(self.path, exist_ok=True)
+        # numbered past every record, bare reservations included: a
+        # number some record holds can never be committed again
+        v = last + 1
+        d = os.path.join(self.path, f"v_{v:08d}_{uuid.uuid4().hex}")
         try:
-            fd = os.open(self._marker(v), os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-            os.close(fd)
-        except FileExistsError:
-            raise CommitConflict(f"version {v} already reserved") from None
-        target = self._version_dir(v)
-        try:
-            df.write.mode("overwrite").parquet(target)
-        except Exception:
-            # release the reservation: a marker left behind by a failed
-            # write would make every later commit target a permanently
-            # reserved version number and wedge the store
-            shutil.rmtree(target, ignore_errors=True)
-            try:
-                os.unlink(self._marker(v))
-            except FileNotFoundError:
-                pass
+            df.write.parquet(d)
+            self._publish(v, d)
+        except Exception as exc:
+            shutil.rmtree(d, ignore_errors=True)
+            # lost the race for v (the winner's sweep may have removed d
+            # mid-write): re-read and retry, like any other conflict
+            if os.path.exists(self._record(v)):
+                raise CommitConflict(f"version {v} already committed") from exc
             raise
-        tmp = self._pointer() + ".tmp"
-        with open(tmp, "w") as f:
+        with open(self._pointer(), "w") as f:
             f.write(str(v))
-        os.replace(tmp, self._pointer())  # atomic pointer bump
-        # retain a window of versions for concurrent readers and
-        # time-travel; GC everything older
-        for old in range(v - self.retain, -1, -1):
-            d = self._version_dir(old)
-            if os.path.isdir(d):
-                shutil.rmtree(d, ignore_errors=True)
-            m = self._marker(old)
-            if os.path.exists(m):
-                os.unlink(m)
+        self._sweep(v)
+
+    def _publish(self, v: int, data_dir: str) -> None:
+        """The commit: create record `v` naming `data_dir`, content
+        included, in one step that fails if `v` is taken.  The link's
+        source stays in the data directory, where Spark skips it (names
+        starting with '_' are not data)."""
+        src = os.path.join(data_dir, "_record")
+        with open(src, "w") as f:
+            f.write(os.path.basename(data_dir))
+        os.link(src, self._record(v))
+
+    def _sweep(self, v: int) -> None:
+        """After committing `v`: drop every version older than the
+        retention window (kept for concurrent readers and time-travel),
+        and every data directory staged for a version <= v that its
+        record does not name -- from a writer that lost that version or
+        was killed before committing.  No record can ever name such a
+        directory, so removing it is safe even while its writer runs."""
+        oldest = v - self.retain + 1
+        keep = {self._version_dir(n) for n in range(max(0, oldest), v + 1)}
+        for name in os.listdir(self.path):
+            p = os.path.join(self.path, name)
+            if name.startswith("_COMMIT_") and int(name[len("_COMMIT_"):]) < oldest:
+                with contextlib.suppress(FileNotFoundError):
+                    os.unlink(p)
+            elif name.startswith("v_") and int(name[2:10]) <= v and p not in keep:
+                shutil.rmtree(p, ignore_errors=True)
 
     # -- operations --
 

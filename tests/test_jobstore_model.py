@@ -9,6 +9,8 @@ the Spark round-trip count bounded."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
@@ -101,3 +103,44 @@ def test_jobstore_agrees_with_dict_model(spark, tmp_path_factory, ops):
     hist = store.history()
     assert hist == sorted(hist)
     assert len(hist) == commits
+
+
+def test_killed_writer_leaves_store_writable(spark, tmp_path):
+    """A writer killed mid-commit runs no cleanup.  Each on-disk state it
+    can leave -- a version reserved before any data was written, data
+    written but never committed, a commit record with the `_CURRENT`
+    hint not yet moved -- must leave the next upsert committing, and the
+    table agreeing with a dict model."""
+    store = JobStore(spark, str(tmp_path / "store"))
+    store.init(spark.createDataFrame([(k, "a", 0) for k in KEYS], SCHEMA))
+    model = {k: ("a", 0) for k in KEYS}
+
+    def frame(rows):
+        return spark.createDataFrame(rows, SCHEMA)
+
+    def upsert_agrees(k, status, val):
+        store.upsert(frame([(k, status, val)]), ["status", "val"])
+        model[k] = (status, val)
+        got = {r["id"]: (r["status"], r["val"]) for r in store.read().collect()}
+        assert got == model
+
+    # 1. a bare reservation of the next version (reserve-then-write order)
+    v = store.current_version() + 1
+    open(os.path.join(store.path, f"_COMMIT_{v:08d}"), "x").close()
+    upsert_agrees(0, "b", 1)
+
+    # 2. an orphan data directory, staged for the next version
+    v = store.current_version() + 1
+    orphan = os.path.join(store.path, f"v_{v:08d}_killed")
+    frame([(k, "z", 99) for k in KEYS]).write.parquet(orphan)
+    upsert_agrees(1, "c", 2)
+    assert not os.path.exists(orphan)
+
+    # 3. a commit record without the hint bump: the version committed
+    v = store.current_version() + 1
+    model[2] = ("b", 3)
+    staged = os.path.join(store.path, f"v_{v:08d}_committed")
+    frame([(k, *row) for k, row in model.items()]).write.parquet(staged)
+    store._publish(v, staged)
+    upsert_agrees(3, "c", 4)
+    assert store.current_version() == v + 1

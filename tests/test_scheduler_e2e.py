@@ -4,6 +4,7 @@ statuses and video_files effects asserted (SURVEY.md §5 plan item 3)."""
 
 from __future__ import annotations
 
+import os
 from datetime import datetime, timedelta
 
 import pytest
@@ -185,6 +186,38 @@ def test_two_pass_format_runs_two_passes(spark, tmp_path):
     store = {r["id"]: r["status"] for r in jobs.read().collect()}
     status = {r["id"]: r["final_status"] for r in results}
     assert status == store == {i: "Done" for i in range(1, 6)}
+
+
+def test_each_claimed_job_runs_in_its_own_task(spark, tmp_path):
+    """ST8: a cycle runs each claimed job in its own task, so
+    min(max_concurrent, defaultParallelism) encodes run at once.  Ids
+    1-4 put jobs 2 and 4 in one bucket of a 4-way hash partitioning by
+    id, which would run them one after another in one task."""
+    from pyspark import TaskContext
+
+    from encodesrv_spark.jobs.process import stub_encode
+
+    tasks_dir = tmp_path / "tasks"
+    tasks_dir.mkdir()
+    record_to = str(tasks_dir)
+
+    def recording_encode(argv, cwd):
+        stub_encode(argv, cwd)
+        src = os.path.basename(argv[argv.index("-i") + 1])
+        part = TaskContext.get().partitionId()
+        with open(os.path.join(record_to, src), "w") as f:
+            f.write(str(part))
+
+    jobs, vf = seed_stores(spark, tmp_path, n_jobs=4)
+    sched = mk_scheduler(spark, tmp_path, jobs, vf, max_concurrent=4)
+    sched.process_cfg.encode = recording_encode
+    results = sched.run_cycle().collect()
+
+    assert sorted(r["id"] for r in results) == [1, 2, 3, 4]
+    assert all(r["final_status"] == "Done" for r in results)
+    parts = [p.read_text() for p in tasks_dir.iterdir()]
+    assert len(parts) == 4
+    assert len(set(parts)) == min(4, spark.sparkContext.defaultParallelism)
 
 
 def test_failed_job_lands_in_error_and_others_proceed(spark, tmp_path):
