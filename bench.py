@@ -11,12 +11,12 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from encodesrv_spark.plans.registry import all_queries
 from encodesrv_spark.session import get_spark
+from encodesrv_spark.trace import trace
 
 # Headline set: the reference-shaped poll/claim pipeline, the TPC-H-shaped
 # analytics, and (as they land) the LLM-pipeline extension operators.
@@ -40,19 +40,11 @@ HEADLINE = [
 ]
 
 
-def time_query(spark, qs, name: str, sf_dir: str, reps: int = 3) -> float:
-    """The frozen measurement discipline, in ONE place (bench headline,
-    bench extras, and tools/scaling_curve.py all call this): execute to
-    completion via the noop sink, `reps` measured runs, report the
-    median.  Callers warm the query once at the same SF first."""
-    import statistics as _st
-
-    ts = []
-    for _ in range(reps):
-        t0 = time.time()
-        qs[name].fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
-        ts.append(time.time() - t0)
-    return round(_st.median(ts), 3)
+def time_query(spark, qs, name: str, sf_dir: str, reps: int = 3) -> dict:
+    """The frozen measurement discipline, in ONE place (bench and both
+    timing tools): `reps` noop-sink runs traced by :func:`trace`, median
+    ``wall_s``.  Callers warm the query once at the same SF first."""
+    return trace(spark, lambda: qs[name].fn(spark, sf_dir), reps)
 
 
 def warm(spark, qs, name: str, sf_dir: str) -> None:
@@ -93,18 +85,11 @@ CONTROLS = ["events_ewma", "copurchase_degree_dist", "doc_token_entropy"]
 def measure_controls(spark, qs, sf_dir: str) -> dict[str, float]:
     """One control snapshot under the frozen discipline (one warm-up
     already done by the caller's first snapshot; median-of-3)."""
-    import statistics as _st
-
     out = {}
     for name in CONTROLS:
         if name in qs:
-            out[name] = time_query(spark, qs, name, sf_dir)
-    ts = []
-    for _ in range(3):
-        t0 = time.time()
-        _scan_control_df(spark, sf_dir).write.mode("overwrite").format("noop").save()
-        ts.append(time.time() - t0)
-    out["scan_filtered"] = round(_st.median(ts), 3)
+            out[name] = time_query(spark, qs, name, sf_dir)["wall_s"]
+    out["scan_filtered"] = trace(spark, lambda: _scan_control_df(spark, sf_dir), 3)["wall_s"]
     return out
 
 
@@ -130,7 +115,7 @@ def main() -> None:
     # the median of 3 warm reps is robust to one such spike while not
     # under-reporting like min-of-reps can.
     timings = {
-        name: time_query(spark, qs, name, sf_dir)
+        name: time_query(spark, qs, name, sf_dir)["wall_s"]
         for name in HEADLINE
         if name in qs
     }
@@ -271,7 +256,7 @@ def main() -> None:
             segments["middle"] = measure_controls(spark, qs, sf_dir)
             loadavg["middle"] = round(os.getloadavg()[0], 2)
         warm(spark, qs, name, sf_dir)
-        extra[name] = time_query(spark, qs, name, sf_dir, reps=1)
+        extra[name] = time_query(spark, qs, name, sf_dir, reps=1)["wall_s"]
     # Control snapshot 3 of 3, after the extras loop.
     segments["end"] = measure_controls(spark, qs, sf_dir)
     loadavg["end"] = round(os.getloadavg()[0], 2)
@@ -294,7 +279,7 @@ def main() -> None:
         if extra[name] >= thresh:
             reads = [extra[name]]
             for _ in range(2):
-                reads.append(time_query(spark, qs, name, sf_dir, reps=1))
+                reads.append(time_query(spark, qs, name, sf_dir, reps=1)["wall_s"])
             reread[name] = reads
             extra[name] = round(_st.median(reads), 3)
 

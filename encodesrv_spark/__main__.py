@@ -46,6 +46,7 @@ def _cmd_query(name: str, sf_dir: str, explain: bool, n: int) -> int:
 
 
 def _cmd_scheduler(args: argparse.Namespace) -> int:
+    from encodesrv_spark.jobs.process import ProcessConfig
     from encodesrv_spark.jobs.scheduler import Scheduler, SchedulerConfig, prepare_formats
     from encodesrv_spark.jobs.state import JobStore
     from encodesrv_spark.session import get_spark
@@ -57,6 +58,7 @@ def _cmd_scheduler(args: argparse.Namespace) -> int:
         spark,
         jobs,
         formats,
+        process_cfg=ProcessConfig(server=args.server),
         cfg=SchedulerConfig(
             server=args.server,
             mount_prefix=args.mount_prefix,

@@ -9,9 +9,7 @@ md5-derived 60-bit hash that both engines compute identically:
 
 15 hex digits = 60 bits, always < 2^63, so the BIGINT cast is safe.
 md5 is JVM-side (whole-stage codegen'd) in Spark — this stays on the
-fast path; it is ~2x slower than xxhash64 but portable. Production
-deployments that do not need a DuckDB oracle can swap in
-``F.xxhash64`` via the ``fast=`` flag.
+fast path; it is ~2x slower than xxhash64 but portable.
 """
 
 from __future__ import annotations
@@ -20,11 +18,9 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def stable_hash64(col: Column | str, fast: bool = False) -> Column:
+def stable_hash64(col: Column | str) -> Column:
     """60-bit deterministic hash of a string column, portable to DuckDB."""
     c = F.col(col) if isinstance(col, str) else col
-    if fast:
-        return F.xxhash64(c)
     return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")
 
 

@@ -80,7 +80,6 @@ class ProcessConfig:
     analyze_loudness: Callable[[str], str] | None = None  # path -> ffmpeg stderr text
     apply_mp4box: Callable[[str], None] | None = None
     scratch_root: str | None = None
-    target_lufs_default: float = -23.0
     progress_dir: str | None = None  # ST7 side-channel (see emit_progress)
     # per-stage wall-clock bound for the external stages (copy/encode/
     # mp4box).  Hours-long encodes fight Spark's task-retry assumptions

@@ -887,8 +887,8 @@ def density_clusters(
     concurrently — cheaper than two more serialized materialization
     jobs (the source_overlap_matrix lesson: concurrent recompute of
     checkpoint-bounded subtrees beats serializing a materialization).
-    Measured at sf0.1: jobs/execution 54 → 46, interleaved A/B wall
-    see OPTIMIZATION_r11.md."""
+    Measured at sf0.1: jobs/execution 54 → 46; the interleaved A/B wall
+    times are in OPTIMIZATION_r11.md, now in the git history only."""
     from encodesrv_spark.operators import dedup
 
     e = embeddings.select("vec_id")

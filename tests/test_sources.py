@@ -150,6 +150,34 @@ def test_cli_list_and_query(capsys):
     assert main(["query", "nope_not_a_query"]) == 2
 
 
+def test_cli_scheduler_errors_carry_its_server_name(spark, tmp_path):
+    """`scheduler --server srv-b`: a job whose source is missing ends as
+    'srv-b - Error', the server name its claim was made under."""
+    from encodesrv_spark.__main__ import main
+    from encodesrv_spark.jobs.schema import ENCODE_FORMATS_SCHEMA, ENCODE_JOBS_SCHEMA
+    from encodesrv_spark.jobs.state import JobStore
+
+    (tmp_path / "media").mkdir()
+    (tmp_path / "media" / "a.mov").write_bytes(b"x" * 100)
+    fmt = (1, "web-hd", "mp4", 1_000_000, None, "libx264", "1280x720", 128_000, 44100, "aac",
+           None, "16:9", "", "", "", "", False, "mp4", "-preset fast", "", 1, 1)
+    spark.createDataFrame([fmt], ENCODE_FORMATS_SCHEMA).write.parquet(str(tmp_path / "formats"))
+    jobs = JobStore(spark, str(tmp_path / "jobs"))
+    jobs.init(
+        spark.createDataFrame(
+            [
+                (1, "/media/a.mov", "/media/out/a.mp4", 1, "Not Encoding", None, None, None, 2.0),
+                (2, "/media/gone.mov", "/media/out/b.mp4", 1, "Not Encoding", None, None, None, 1.0),
+            ],
+            ENCODE_JOBS_SCHEMA,
+        )
+    )
+    argv = ["scheduler", "--jobs-store", str(tmp_path / "jobs"), "--formats", str(tmp_path / "formats"),
+            "--server", "srv-b", "--mount-prefix", str(tmp_path) + "/", "--cycles", "1", "--poll-interval", "0"]
+    assert main(argv) == 0
+    assert {r["id"]: r["status"] for r in jobs.read().collect()} == {1: "Done", 2: "srv-b - Error"}
+
+
 # ---------------------------------------------------------------------------
 # Compaction + range-clustered layout (sources/compaction.py)
 # ---------------------------------------------------------------------------

@@ -34,13 +34,13 @@ def main() -> None:
         for name in HEADLINE:
             warm(spark, qs, name, sf_dir)
         for name in HEADLINE:
-            times[name][sf] = time_query(spark, qs, name, sf_dir)
+            times[name][sf] = time_query(spark, qs, name, sf_dir)["wall_s"]
 
     lines = [
         "# SCALING — measured wall time vs data size (headline queries)",
         "",
         "Generated by `python tools/scaling_curve.py`: median of 3 warm",
-        "reps per query per scale factor on local[32].  `x0.1/0.01` is",
+        f"reps per query per scale factor on {spark.sparkContext.master}.  `x0.1/0.01` is",
         "the time ratio across a 10x data growth — well under 10 means",
         "the plan still amortizes fixed cost (scheduling, codegen,",
         "exchange setup) and has headroom; near 10 means data-bound",
