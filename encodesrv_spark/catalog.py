@@ -129,10 +129,6 @@ def table_rows(sf_dir: str, name: str) -> int:
     return pq.ParquetFile(path).metadata.num_rows
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TABLES}
-
-
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every testdata table as a temp view (for spark.sql plans)."""
     for t in TABLES:

@@ -61,26 +61,6 @@ def nice_name(path: Column | str, format_name: Column | str) -> Column:
     return F.concat(basename(path), F.lit(" ("), _c(format_name), F.lit(")"))
 
 
-def truthy(col: Column | str) -> Column:
-    """P8 — the reference's truthy-arg gate: present AND non-empty AND not
-    the string '0'-ish falsiness it relies on (reference encodesrv/job.py:236-242).
-    For string columns: not null and not ''."""
-    c = _c(col)
-    return c.isNotNull() & (c != F.lit(""))
-
-
-def arg_fragment(template: str, value: Column | str) -> Column:
-    """F6 — emit a command fragment iff its parameter is truthy; NULL
-    otherwise (concat_ws drops NULLs) (reference encodesrv/job.py:235-244)."""
-    v = _c(value)
-    return F.when(truthy(v), F.format_string(template, v))
-
-
-def clean_template(col: Column | str) -> Column:
-    """F7 — strip newline/tab/CR to spaces (reference encodesrv/job.py:239)."""
-    return F.translate(_c(col), "\n\t\r", "   ")
-
-
 def pluralize(count: Column | str) -> Column:
     """F14 — '' if count == 1 else 's' (reference encodesrv/logs/bots/common.py:79)."""
     return F.when(_c(count) == 1, F.lit("")).otherwise(F.lit("s"))
@@ -142,8 +122,3 @@ def iso_ts(col: Column | str) -> Column:
     """F15 — ISO-8601 second-precision rendering (reference
     encodesrv/__init__.py:128-130)."""
     return F.date_format(_c(col), "yyyy-MM-dd'T'HH:mm:ss")
-
-
-def stale_more_than_days(now: Column | str, last: Column | str, days: int) -> Column:
-    """F16 — watchdog staleness check (reference encodesrv/__init__.py:121-125)."""
-    return (_c(now).cast("long") - _c(last).cast("long")) > days * 86400

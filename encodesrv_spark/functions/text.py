@@ -23,6 +23,17 @@ def tokens(col: Column | str) -> Column:
     return F.split(_c(col), WS)
 
 
+# DuckDB form of tokens_ne, for the oracles; the two are kept together
+# so the Spark and DuckDB tokenizations stay locked.
+TOKS_NE_SQL = r"list_filter(string_split_regex(text, '\s+'), t -> t <> '')"
+
+
+def tokens_ne(col: Column | str = "text") -> Column:
+    """Whitespace tokens with the empties dropped (the split yields ''
+    around leading/trailing whitespace)."""
+    return F.filter(tokens(col), lambda t: t != "")
+
+
 def distinct_tokens(col: Column | str) -> Column:
     return F.array_distinct(tokens(col))
 

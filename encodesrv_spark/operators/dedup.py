@@ -368,9 +368,11 @@ def simhash(docs: DataFrame, bits: int = 32) -> DataFrame:
     )
 
 
-def connected_components(
-    pairs: DataFrame, max_iters: int = 20, pairs_distinct: bool = False
-) -> DataFrame:
+# label-propagation rounds connected_components runs at most
+CC_MAX_ITERS = 20
+
+
+def connected_components(pairs: DataFrame) -> DataFrame:
     """Connected components over an undirected pair graph
     ((doc_a, doc_b) edges) by iterative min-label propagation: every
     node repeatedly adopts the smallest label among itself and its
@@ -380,7 +382,7 @@ def connected_components(
     This is the cluster step of dedup (candidate PAIRS from LSH →
     duplicate GROUPS → one keeper per group).  Convergence needs
     O(graph diameter) rounds — near-dup graphs are unions of small
-    cliques, so 2-3 iterations in practice; `max_iters` bounds
+    cliques, so 2-3 iterations in practice; `CC_MAX_ITERS` bounds
     pathological chains.  (A pointer-jumping variant — Rastogi et al.
     2012 — was measured: it cut rounds 7 → 5 on the densest in-repo
     graph but its label-table re-key broke the co-partitioned loop
@@ -404,21 +406,15 @@ def connected_components(
     loop checks a single aggregate per round (a scalar, not a collect
     of data).
 
-    ``pairs_distinct=True`` asserts the input pair list is already
-    duplicate-free with doc_a < doc_b (true for every in-repo producer:
-    LSH banding ends in .distinct(), the jaccard/containment families
-    group by the pair, cosine/hamming blocking joins emit each a<b pair
-    at most once) and skips the symmetrize-then-distinct exchange —
-    the two union branches cannot collide when a < b on every input
-    row.  Labels are identical either way; duplicates would only have
-    inflated min()-aggregate inputs, so the flag is purely a plan
-    change for callers that can prove uniqueness."""
-    sym = pairs.select(
-        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-    ).union(pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
-    if not pairs_distinct:
-        sym = sym.distinct()
-    edges = sym.localCheckpoint(eager=True)
+    The symmetrized edge list is not de-duplicated: a repeated or
+    reversed input pair only repeats an input of the min() aggregates,
+    so labels are the same with or without a distinct, and the in-repo
+    producers emit each doc_a < doc_b pair at most once anyway."""
+    edges = (
+        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
+        .union(pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
+        .localCheckpoint(eager=True)
+    )
     # Round 1 fused into the initialization: with identity labels, the
     # first propagation round reduces algebraically to component =
     # min(node, min(neighbors)) — ONE aggregate over the symmetrized
@@ -427,7 +423,7 @@ def connected_components(
     # edge set: the larger endpoint of any edge adopts the smaller id,
     # so the skipped fixpoint check could never have fired).  The label
     # sequence from round 2 on is identical to the unfused loop, and
-    # the total round bound is unchanged: 1 fused + (max_iters − 1)
+    # the total round bound is unchanged: 1 fused + (CC_MAX_ITERS − 1)
     # joined rounds.
     labels = (
         edges.groupBy(F.col("src").alias("node"))
@@ -435,7 +431,7 @@ def connected_components(
         .select("node", F.least(F.col("node"), F.col("min_nbr")).alias("component"))
         .localCheckpoint(eager=True)
     )
-    for _ in range(max_iters - 1):
+    for _ in range(CC_MAX_ITERS - 1):
         # SHUFFLE_HASH build on the narrow label side: no per-round
         # re-sort of the edge list, no size-statistics guesswork on
         # checkpointed inputs (see docstring)

@@ -203,9 +203,7 @@ def _norm_projection(embeddings: DataFrame) -> DataFrame:
     )
 
 
-def ivf_assign(
-    embeddings: DataFrame, n_centroids: int = 16, _projected: DataFrame | None = None
-) -> DataFrame:
+def ivf_assign(projected: DataFrame, n_centroids: int) -> DataFrame:
     """IVF coarse quantizer: assign every vector to its nearest
     centroid's cell (max cosine, centroid id breaks ties).
 
@@ -216,9 +214,9 @@ def ivf_assign(
     IVF partition key: at 100 TB the corpus is written partitioned
     by cell, so a probe reads only nprobe cells' files.
 
-    `_projected` lets a caller (ivf_ann) hand in an already-
-    materialized (vec_id, emb, nrm) frame so the embedding scan isn't
-    re-derived per consumer.
+    `projected` is the (vec_id, emb, nrm) frame of `_norm_projection`;
+    the callers hand in their materialized copy, so the embedding scan
+    isn't re-derived per consumer.
 
     Assignment is the kmeans map-only idiom (§2.3/§2.4, r10): the
     centroids collapse to ONE broadcast row holding a struct array,
@@ -227,8 +225,7 @@ def ivf_assign(
     ASC) argmax the earlier row_number window computed, with NO
     exchange: the window form shuffled n_centroids rows PER VECTOR,
     each dragging the full embedding array, just to rank them."""
-    e = _projected if _projected is not None else _norm_projection(embeddings)
-    c = e.filter(F.col("vec_id") < n_centroids).select(
+    c = projected.filter(F.col("vec_id") < n_centroids).select(
         F.col("vec_id").alias("cent_id"),
         F.col("emb").alias("cemb"),
         F.col("nrm").alias("cnrm"),
@@ -246,7 +243,7 @@ def ivf_assign(
             (-cc["cent_id"]).alias("negcent"),
         ),
     )
-    return e.crossJoin(F.broadcast(packed)).select(
+    return projected.crossJoin(F.broadcast(packed)).select(
         "vec_id",
         "emb",
         "nrm",
@@ -405,7 +402,7 @@ def ivfpq_ann(
         F.col("emb").alias("cemb"),
         F.col("nrm").alias("cnrm"),
     )
-    cells = ivf_assign(embeddings, n_centroids, _projected=e).select("vec_id", "cell")
+    cells = ivf_assign(e, n_centroids).select("vec_id", "cell")
     enc = pq_encode(embeddings, m, n_sub, dims).select("vec_id", "recon", "rnrm")
     cand_base = cells.join(enc, "vec_id")
     q = e.filter(F.col("vec_id") < n_query_vecs).select(
@@ -448,39 +445,32 @@ def ivfpq_ann(
     )
 
 
+# decimal places every k-means centroid component is rounded to
+KMEANS_ROUND_CENT = 6
+
+
 def kmeans(
     embeddings: DataFrame,
     k: int = 8,
     iters: int = 2,
-    round_cent: int = 6,
-    tol: float | None = None,
-    return_info: bool = False,
     keep_emb: bool = False,
     update_last: bool = True,
 ):
     """Deterministic Lloyd's k-means over the embedding column, fully
     as DataFrame ops: assignment is an argmin over a broadcast
     centroid table, the update step is a per-(cluster, dim) mean over
-    the exploded vectors.  Returns (assigned, centroids) after at most
-    `iters` rounds: assigned = (vec_id, cid), centroids = (cid, cemb).
-
-    `tol` turns on run-to-convergence: after each update the max
-    absolute per-component centroid shift (a k×d-sized aggregate —
-    negligible next to the assignment pass) is compared against `tol`
-    and iteration stops early once movement <= tol.  `tol=None`
-    (default) keeps the exact fixed-iteration schedule the DuckDB
-    oracle unrolls.  With `return_info=True` a third DataFrame is
-    returned as the convergence readout: one row per executed round
-    (iter, max_shift, converged).
+    the exploded vectors.  Returns (assigned, centroids) after exactly
+    `iters` rounds, the fixed schedule the DuckDB oracle unrolls:
+    assigned = (vec_id, cid), centroids = (cid, cemb).
 
     Determinism for the cross-engine oracle: init centroids are the
     first `k` corpus vectors (same stand-in rule as ivf_assign), L2²
     uses the 3-inner-product form rounded to 4 dp before the argmin
     (ties → lowest cid), and each new centroid component is a mean
-    ROUNDED to `round_cent` dp — so both engines carry bit-identical
-    centroids into the next iteration regardless of their summation
-    order (the only non-reproducible float op here; the rounding
-    absorbs the ~1 ulp partial-aggregation jitter).
+    ROUNDED to `KMEANS_ROUND_CENT` dp — so both engines carry
+    bit-identical centroids into the next iteration regardless of
+    their summation order (the only non-reproducible float op here;
+    the rounding absorbs the ~1 ulp partial-aggregation jitter).
 
     Scale shape per iteration: one broadcast of the k centroids
     (collected into a SINGLE sorted array column), one fully MAP-SIDE
@@ -500,28 +490,18 @@ def kmeans(
     otherwise pay a full per-(cid, dim) mean + materialization for a
     frame they throw away.  The assignment sequence is identical; the
     returned centroid frame is then the one the final assignment was
-    scored against.  Incompatible with `tol`/`return_info` (both need
-    the last shift) — asserted."""
-    assert update_last or not (tol is not None or return_info), (
-        "update_last=False discards the final update; tol/return_info need it"
-    )
+    scored against."""
     # Both squared norms are constant per point / per centroid, so they
     # are computed ONCE here instead of once per (point, centroid)
     # score — the d2 value (and hence every rounded comparison the
     # oracle replays) is identical, but the scoring pass drops from
     # 3 to 1 array folds per pair.
-    e = (
-        embeddings.select("vec_id", _as_double("embedding").alias("emb"))
-        .withColumn("nrm", sq_norm(F.col("emb")))
-        .localCheckpoint(eager=True)
-    )
+    e = _norm_projection(embeddings).localCheckpoint(eager=True)
     cent = e.filter(F.col("vec_id") < k).select(
         F.col("vec_id").alias("cid"), F.col("emb").alias("cemb"),
         F.col("nrm").alias("cnrm"),
     )
     assigned = None
-    history: list[tuple[int, float]] = []
-    track_shift = tol is not None or return_info
     for i in range(iters):
         # The k centroids collapse to ONE broadcast row holding a
         # struct array; each point then scores every centroid with a
@@ -553,47 +533,21 @@ def kmeans(
         cmeans = (
             assigned.select("cid", F.posexplode("emb").alias("dim", "v"))
             .groupBy("cid", "dim")
-            .agg(F.round(F.avg("v"), round_cent).alias("cv"))
+            .agg(F.round(F.avg("v"), KMEANS_ROUND_CENT).alias("cv"))
         )
-        new_cent = (
+        cent = (
             cmeans.groupBy("cid")
             .agg(F.array_sort(F.collect_list(F.struct("dim", "cv"))).alias("dc"))
             .select("cid", F.expr("transform(dc, x -> x.cv)").alias("cemb"))
             .withColumn("cnrm", sq_norm(F.col("cemb")))
             .localCheckpoint(eager=True)
         )
-        if track_shift:
-            # k×d rows on already-checkpointed frames — the scalar
-            # readout that makes the stop decision is the one driver
-            # action per round any convergence loop needs
-            shift = (
-                new_cent.select("cid", F.posexplode("cemb").alias("dim", "nv"))
-                .join(
-                    cent.select("cid", F.posexplode("cemb").alias("dim", "ov")),
-                    ["cid", "dim"],
-                )
-                .agg(F.max(F.abs(F.col("nv") - F.col("ov"))).alias("s"))
-                .collect()[0]["s"]
-            )
-            history.append((i + 1, float(shift if shift is not None else 0.0)))
-        cent = new_cent
-        if tol is not None and history and history[-1][1] <= tol:
-            break
     # keep_emb: consumers that need the member vectors (semdedup's
     # intra-cluster pass) take them from the final assignment frame —
     # it already carries emb from the checkpointed projection, so this
     # saves those consumers a second corpus scan + re-join
     cols = ["vec_id", "cid", "emb"] if keep_emb else ["vec_id", "cid"]
-    out = (assigned.select(*cols), cent.select("cid", "cemb"))
-    if not return_info:
-        return out
-    spark = embeddings.sparkSession
-    converged = tol is not None and bool(history) and history[-1][1] <= tol
-    info = spark.createDataFrame(
-        [(it, s, converged and it == history[-1][0]) for it, s in history],
-        "iter int, max_shift double, converged boolean",
-    )
-    return out + (info,)
+    return assigned.select(*cols), cent.select("cid", "cemb")
 
 
 def ivf_ann(
@@ -617,7 +571,7 @@ def ivf_ann(
         F.col("emb").alias("cemb"),
         F.col("nrm").alias("cnrm"),
     )
-    assigned = ivf_assign(embeddings, n_centroids, _projected=e)
+    assigned = ivf_assign(e, n_centroids)
     q = e.filter(F.col("vec_id") < n_query_vecs).select(
         F.col("vec_id").alias("query_id"),
         F.col("emb").alias("qemb"),
@@ -911,9 +865,7 @@ def density_clusters(
         .join(cores.select(F.col("node").alias("vec_b")), "vec_b", "left_semi")
         .select(F.col("vec_a").alias("doc_a"), F.col("vec_b").alias("doc_b"))
     )
-    # core_edges keeps vec_a < vec_b and the semi-joins only filter, so
-    # the pair list stays duplicate-free — skip CC's defensive distinct
-    comp = dedup.connected_components(core_edges, pairs_distinct=True).select(
+    comp = dedup.connected_components(core_edges).select(
         F.col("doc_id").alias("node"), F.col("component").alias("cluster")
     )
     # isolated cores (no core neighbor) anchor their own cluster

@@ -20,18 +20,9 @@ from pyspark.sql import Window as W
 from encodesrv_spark.catalog import load_table
 from encodesrv_spark.functions import hashing as H
 from encodesrv_spark.functions import text as T
+from encodesrv_spark.functions.text import TOKS_NE_SQL, tokens_ne
 from encodesrv_spark.operators import dedup, similarity
 from encodesrv_spark.plans.registry import register
-from encodesrv_spark.session import prep
-
-# Tokens with the empties dropped (split on '\s+' yields '' around
-# leading/trailing whitespace) — keep the Spark and DuckDB forms locked.
-_TOKS_NE = r"list_filter(string_split_regex(text, '\s+'), t -> t <> '')"
-
-
-def _tokens_ne(col: str = "text"):
-    return F.filter(T.tokens(col), lambda t: t != "")
-
 
 # ---------------------------------------------------------------------------
 # Inverted index
@@ -43,7 +34,7 @@ def _tokens_ne(col: str = "text"):
         SELECT tok, count(*)::BIGINT AS df,
                array_to_string(list_sort(list(doc_id)), ',') AS postings
         FROM (
-            SELECT doc_id, unnest(list_distinct({_TOKS_NE})) AS tok
+            SELECT doc_id, unnest(list_distinct({TOKS_NE_SQL})) AS tok
             FROM documents
         )
         GROUP BY tok
@@ -58,10 +49,9 @@ def inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     stopwords — posting lists for those are exactly the rows a real
     deployment would cap or tier, and the groupBy is partial-aggregated
     map-side so the skew lands only on the final collect."""
-    prep(spark)
     d = dedup.fan_out(load_table(spark, sf_dir, "documents"))
     toks = d.select(
-        "doc_id", F.explode_outer(F.array_distinct(_tokens_ne())).alias("tok")
+        "doc_id", F.explode_outer(F.array_distinct(tokens_ne())).alias("tok")
     ).filter(F.col("tok").isNotNull())
     return toks.groupBy("tok").agg(
         F.count("*").alias("df"),
@@ -84,7 +74,7 @@ def inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
         WITH tf AS (
             SELECT doc_id, tok, count(*)::BIGINT AS cnt
-            FROM (SELECT doc_id, unnest({_TOKS_NE}) AS tok FROM documents)
+            FROM (SELECT doc_id, unnest({TOKS_NE_SQL}) AS tok FROM documents)
             GROUP BY 1, 2
         ),
         stats AS (
@@ -117,10 +107,9 @@ def tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     are rounded BEFORE ranking on both sides so cross-engine ulp
     differences in ln() cannot reorder, and rank ties break on the
     token string."""
-    prep(spark)
     d = dedup.fan_out(load_table(spark, sf_dir, "documents"))
     tf = (
-        d.select("doc_id", F.explode_outer(_tokens_ne()).alias("tok"))
+        d.select("doc_id", F.explode_outer(tokens_ne()).alias("tok"))
         .filter(F.col("tok").isNotNull())
         .groupBy("doc_id", "tok")
         .agg(F.count("*").alias("cnt"))
@@ -193,7 +182,6 @@ def decontaminate_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     Generate work, 2× the raw-text fan-out exchange, plus two
     corpus-scale broadcast joins, all for rows that were about to be
     discarded."""
-    prep(spark)
     d = load_table(spark, sf_dir, "documents")
     bench = dedup.shingle_index(d.filter(F.col("source") == "src0"), 5).select(
         F.col("doc_id").alias("bench_doc"), F.xxhash64("sh").alias("h")
@@ -224,7 +212,7 @@ def decontaminate_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
                round(quantile_cont(n_toks, 0.50), 4) AS p50,
                round(quantile_cont(n_toks, 0.75), 4) AS p75,
                round(quantile_cont(n_toks, 0.95), 4) AS p95
-        FROM (SELECT lang, len({_TOKS_NE})::BIGINT AS n_toks FROM documents)
+        FROM (SELECT lang, len({TOKS_NE_SQL})::BIGINT AS n_toks FROM documents)
         GROUP BY lang
     """,
     tags=("llm", "stats"),
@@ -238,9 +226,8 @@ def token_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     group.  At 100 TB you'd swap percentile -> percentile_approx
     (t-digest, mergeable partial aggs) — the approx twin of this query
     already exists as `approx_stats`."""
-    prep(spark)
     d = dedup.fan_out(load_table(spark, sf_dir, "documents"))
-    toks = d.select("lang", F.size(_tokens_ne()).cast("long").alias("n_toks"))
+    toks = d.select("lang", F.size(tokens_ne()).cast("long").alias("n_toks"))
     pct = F.percentile("n_toks", F.array(*[F.lit(p) for p in (0.25, 0.5, 0.75, 0.95)]))
     return toks.groupBy("lang").agg(
         F.count("*").alias("n_docs"),
@@ -274,7 +261,6 @@ def length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket rows FIRST; the unpartitioned cumulative window runs on
     those rows only, so the single-partition sort that would be a
     bottleneck on raw data is free here."""
-    prep(spark)
     d = dedup.fan_out(load_table(spark, sf_dir, "documents"))
     h = (
         d.select((F.expr("n_chars div 100") * 100).cast("long").alias("bucket"))
@@ -304,7 +290,7 @@ def length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         WITH per AS (
             SELECT source, count(*)::BIGINT AS n_docs,
                    sum(n_toks)::BIGINT AS total_tokens
-            FROM (SELECT source, len({_TOKS_NE})::BIGINT AS n_toks
+            FROM (SELECT source, len({TOKS_NE_SQL})::BIGINT AS n_toks
                   FROM documents)
             GROUP BY source
         ),
@@ -325,10 +311,9 @@ def domain_mix_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     dimension swap).  One corpus-wide aggregate keyed on source, then
     a 1-row broadcast of the totals — the reweighting math never
     touches corpus-scale data."""
-    prep(spark)
     d = dedup.fan_out(load_table(spark, sf_dir, "documents"))
     per = (
-        d.select("source", F.size(_tokens_ne()).cast("long").alias("n_toks"))
+        d.select("source", F.size(tokens_ne()).cast("long").alias("n_toks"))
         .groupBy("source")
         .agg(F.count("*").alias("n_docs"), F.sum("n_toks").alias("total_tokens"))
     )
@@ -362,7 +347,7 @@ _BM25_B = 0.75
     oracle=f"""
         WITH tf AS (
             SELECT doc_id, tok, count(*)::BIGINT AS cnt
-            FROM (SELECT doc_id, unnest({_TOKS_NE}) AS tok FROM documents)
+            FROM (SELECT doc_id, unnest({TOKS_NE_SQL}) AS tok FROM documents)
             GROUP BY 1, 2
         ),
         dl AS (SELECT doc_id, sum(cnt) AS dl FROM tf GROUP BY 1),
@@ -403,10 +388,9 @@ def bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     the tf aggregate.  Scores round before the global top-20
     (TakeOrderedAndProject — per-partition heaps, no full sort), ties
     break on doc_id."""
-    prep(spark)
     d = dedup.fan_out(load_table(spark, sf_dir, "documents"))
     tf = (
-        d.select("doc_id", F.explode_outer(_tokens_ne()).alias("tok"))
+        d.select("doc_id", F.explode_outer(tokens_ne()).alias("tok"))
         .filter(F.col("tok").isNotNull())
         .groupBy("doc_id", "tok")
         .agg(F.count("*").alias("cnt"))
@@ -457,7 +441,7 @@ def bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     "doc_repetition_stats",
     oracle=f"""
         WITH toks AS (
-            SELECT doc_id, {_TOKS_NE} AS t FROM documents
+            SELECT doc_id, {TOKS_NE_SQL} AS t FROM documents
         ),
         tf AS (
             SELECT doc_id, tok, count(*)::BIGINT AS cnt
@@ -518,9 +502,8 @@ def doc_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-sized recomputes.  Generalizes EncodeSrv's scalar text
     functions (reference encodesrv/job.py:204-205 regex analysis) to
     corpus QA."""
-    prep(spark)
     d = dedup.fan_out(load_table(spark, sf_dir, "documents"))
-    toks = d.select("doc_id", _tokens_ne().alias("t")).localCheckpoint(
+    toks = d.select("doc_id", tokens_ne().alias("t")).localCheckpoint(
         eager=True
     )
     tf = (
@@ -596,7 +579,6 @@ def incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     same hash key so one Exchange serves both, and the incoming side is
     typically orders of magnitude smaller than the store, which AQE can
     flip to a broadcast when the BATCH side is the small one."""
-    prep(spark)
     d = dedup.fan_out(load_table(spark, sf_dir, "documents"))
     store = (
         d.filter(F.col("source") == "src0")
@@ -659,7 +641,6 @@ def label_centroid_cohesion(spark: SparkSession, sf_dir: str) -> DataFrame:
     sum per (label, pos, partition), not N*D rows — and the tiny
     centroid table (labels x dims) broadcasts back onto the members;
     the only corpus-scale shuffle is the final per-label aggregate."""
-    prep(spark)
     e = (
         load_table(spark, sf_dir, "embeddings")
         .select(
@@ -709,7 +690,7 @@ def label_centroid_cohesion(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
         WITH tf AS (
             SELECT doc_id, tok, count(*)::BIGINT AS cnt
-            FROM (SELECT doc_id, unnest({_TOKS_NE}) AS tok FROM documents)
+            FROM (SELECT doc_id, unnest({TOKS_NE_SQL}) AS tok FROM documents)
             GROUP BY 1, 2
         ),
         gterm AS (SELECT tok, sum(cnt) AS gcnt FROM tf GROUP BY 1),
@@ -734,10 +715,9 @@ def unigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast hint — AQE broadcasts it while it fits and falls back to
     a hash join keyed on tok when it doesn't.  The corpus-scale shuffle
     is the one (doc_id, tok) aggregate."""
-    prep(spark)
     d = dedup.fan_out(load_table(spark, sf_dir, "documents"))
     tf = (
-        d.select("doc_id", F.explode_outer(_tokens_ne()).alias("tok"))
+        d.select("doc_id", F.explode_outer(tokens_ne()).alias("tok"))
         .filter(F.col("tok").isNotNull())
         .groupBy("doc_id", "tok")
         .agg(F.count("*").alias("cnt"))
@@ -812,7 +792,6 @@ def ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     travel as 60-bit hashes (8-byte shuffle keys, never strings); the
     first-seen table reuses the same hash partitioning for its join
     back, so the plan is two aggregates and one co-partitioned join."""
-    prep(spark)
     d = dedup.fan_out(load_table(spark, sf_dir, "documents"))
     sh = d.select(
         "doc_id",
@@ -874,7 +853,6 @@ def fuzzy_pairs_levenshtein(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape) — cheap in threshold form: the condition eval is the banded
     early-exit pass over all candidates, and the projection re-eval
     touches only surviving (near-duplicate) pairs."""
-    prep(spark)
     d = dedup.fan_out(load_table(spark, sf_dir, "documents")).select(
         "doc_id", "text", "lang", F.expr("n_chars DIV 16").alias("blk")
     )
@@ -924,7 +902,6 @@ def shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     loader; the aggregation is one partial-agg shuffle on the shard
     key, and the same expression is the `repartition` column at write
     time, so manifest and layout can never disagree."""
-    prep(spark)
     d = dedup.fan_out(load_table(spark, sf_dir, "documents"))
     shard = (
         H.stable_hash64(F.concat(F.lit("shard:"), F.col("doc_id").cast("string")))
@@ -932,7 +909,7 @@ def shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         d.withColumn("shard", shard)
-        .withColumn("n_toks", F.size(_tokens_ne()))
+        .withColumn("n_toks", F.size(tokens_ne()))
         .groupBy("shard")
         .agg(
             F.count("*").alias("n_docs"),
@@ -949,7 +926,7 @@ def shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
         WITH tf AS (
             SELECT doc_id, tok, count(*)::BIGINT AS cnt
-            FROM (SELECT doc_id, unnest({_TOKS_NE}) AS tok FROM documents)
+            FROM (SELECT doc_id, unnest({TOKS_NE_SQL}) AS tok FROM documents)
             GROUP BY 1, 2
         ),
         gterm AS (SELECT tok, sum(cnt) AS gcnt FROM tf GROUP BY 1),
@@ -980,7 +957,6 @@ def quality_decile_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale-caveat (single-partition window over doc-cardinality rows);
     at 100 TB you'd swap it for approx quantile edges — shown exactly
     by token_quantiles — and keep these bands as the exact verifier."""
-    prep(spark)
     from encodesrv_spark.plans.registry import all_queries
 
     scored = all_queries()["unigram_lm_score"].fn(spark, sf_dir).select(
@@ -1005,7 +981,7 @@ def quality_decile_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
         WITH tf AS (
             SELECT doc_id, tok, count(*)::BIGINT AS cnt
-            FROM (SELECT doc_id, unnest({_TOKS_NE}) AS tok FROM documents)
+            FROM (SELECT doc_id, unnest({TOKS_NE_SQL}) AS tok FROM documents)
             GROUP BY 1, 2
         ),
         gterm AS (SELECT tok, sum(cnt) AS gcnt FROM tf GROUP BY 1),
@@ -1042,7 +1018,6 @@ def quality_drift_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     (sources x batches)-sized, so the lag window runs on dimension-
     scale data.  Averages round to 3 before the lag so the delta is
     computed on identical values in both engines."""
-    prep(spark)
     from encodesrv_spark.plans.registry import all_queries
 
     scored = all_queries()["unigram_lm_score"].fn(spark, sf_dir).select(
@@ -1098,7 +1073,6 @@ def source_lang_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     One corpus-scale aggregate keyed (source, lang); everything after
     is (sources × langs)-sized, so the entropy/KL arithmetic runs on
     broadcast-joined tiny tables — no second pass over documents."""
-    prep(spark)
     d = dedup.fan_out(load_table(spark, sf_dir, "documents"))
     # materialize the (source, lang) counts once: s/lang-totals/grand-total
     # all derive from it, and without the checkpoint each branch re-runs
@@ -1140,7 +1114,7 @@ def source_lang_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
         WITH toks AS (
             SELECT doc_id, unnest(t) AS tok, generate_subscripts(t, 1) AS pos
-            FROM (SELECT doc_id, {_TOKS_NE} AS t FROM documents)
+            FROM (SELECT doc_id, {TOKS_NE_SQL} AS t FROM documents)
         ),
         tri AS (
             SELECT tok AS w1,
@@ -1173,10 +1147,9 @@ def trigram_continuations(spark: SparkSession, sf_dir: str) -> DataFrame:
     by doc_id — no cross-doc shuffle of token streams), counts combine
     map-side, and the per-context top-3 is a WindowGroupLimit-prunable
     ranked filter, never a global sort.  Ties break on w3 ascending."""
-    prep(spark)
     d = dedup.fan_out(load_table(spark, sf_dir, "documents"))
     toks = d.select(
-        "doc_id", F.posexplode(_tokens_ne()).alias("pos", "tok")
+        "doc_id", F.posexplode(tokens_ne()).alias("pos", "tok")
     )
     wdoc = W.partitionBy("doc_id").orderBy("pos")
     tri = toks.select(
@@ -1226,7 +1199,6 @@ def weighted_doc_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines/runs/cluster sizes (df.sample is none of those).  Keys are
     compared in log space (u^(1/w) compresses near 1.0 for large w)
     and rounded before ranking with a doc_id tiebreak — the fp rule."""
-    prep(spark)
     d = dedup.fan_out(load_table(spark, sf_dir, "documents")).filter(
         F.col("n_chars") > 0
     )
@@ -1263,8 +1235,8 @@ _CHUNK_S = 40   # stride (W - S = 10 tokens of overlap between chunks)
     "doc_chunks",
     oracle=f"""
         WITH d AS (
-            SELECT doc_id, {_TOKS_NE} AS toks FROM documents
-            WHERE len({_TOKS_NE}) > 0
+            SELECT doc_id, {TOKS_NE_SQL} AS toks FROM documents
+            WHERE len({TOKS_NE_SQL}) > 0
         ),
         st AS (
             SELECT doc_id, toks,
@@ -1293,10 +1265,9 @@ def doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     after `fan_out`, within a partition, and the output carries a
     16-byte chunk hash (join key for downstream dedup-at-chunk-level),
     not the chunk text."""
-    prep(spark)
     d = (
         dedup.fan_out(load_table(spark, sf_dir, "documents"))
-        .select("doc_id", _tokens_ne().alias("toks"))
+        .select("doc_id", tokens_ne().alias("toks"))
         .filter(F.size("toks") > 0)
     )
     st = d.select(
@@ -1377,7 +1348,6 @@ def embedding_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts + final centroid norms; centroids are rounded each round so
     both engines iterate on identical values (see
     operators/similarity.kmeans for the determinism rules)."""
-    prep(spark)
     assigned, cent = similarity.kmeans(
         load_table(spark, sf_dir, "embeddings"), k=8, iters=2
     )
@@ -1393,8 +1363,8 @@ def embedding_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     "chunk_dup_stats",
     oracle=f"""
         WITH d AS (
-            SELECT doc_id, source, {_TOKS_NE} AS toks FROM documents
-            WHERE len({_TOKS_NE}) > 0
+            SELECT doc_id, source, {TOKS_NE_SQL} AS toks FROM documents
+            WHERE len({TOKS_NE_SQL}) > 0
         ),
         st AS (
             SELECT doc_id, source, toks,
@@ -1426,10 +1396,9 @@ def chunk_dup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     Composes the `doc_chunks` machinery with a count-distinct
     aggregate; the shuffle carries (source, 16-byte hash), never
     chunk text."""
-    prep(spark)
     d = (
         dedup.fan_out(load_table(spark, sf_dir, "documents"))
-        .select("doc_id", "source", _tokens_ne().alias("toks"))
+        .select("doc_id", "source", tokens_ne().alias("toks"))
         .filter(F.size("toks") > 0)
     )
     st = d.select(
@@ -1479,7 +1448,7 @@ def _cms_probe_sql() -> str:
 @register(
     "token_cms_topk",
     oracle=f"""
-        WITH toks AS (SELECT unnest({_TOKS_NE}) AS tok FROM documents),
+        WITH toks AS (SELECT unnest({TOKS_NE_SQL}) AS tok FROM documents),
         exact AS (SELECT tok, count(*)::BIGINT AS exact_n FROM toks GROUP BY tok),
         top AS (SELECT tok, exact_n FROM exact ORDER BY exact_n DESC, tok LIMIT 20),
         sk AS (
@@ -1516,10 +1485,9 @@ def token_cms_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     sketch build is a vocab-scale aggregate, not a second pass over
     the token stream (the r10 hashed_shingles rule: share counts,
     never re-derive them)."""
-    prep(spark)
     toks = (
         dedup.fan_out(load_table(spark, sf_dir, "documents"))
-        .select(F.explode(_tokens_ne()).alias("tok"))
+        .select(F.explode(tokens_ne()).alias("tok"))
     )
     exact = (
         toks.groupBy("tok")
@@ -1588,7 +1556,6 @@ def repeated_ngram_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     carries no broadcast hint (shingle vocabulary is corpus-scaled;
     AQE decides).  Documents with zero 5-grams (shorter than 5 words)
     drop out on both engines (inner join semantics)."""
-    prep(spark)
     d = load_table(spark, sf_dir, "documents")
     idx = (
         dedup.shingle_index(d, 5)
@@ -1659,7 +1626,6 @@ def mixture_temperature_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one source-keyed corpus aggregate; every later step
     (shares, powers, normalizers) runs on the source-cardinality frame
     with 1-row broadcast totals."""
-    prep(spark)
     d = load_table(spark, sf_dir, "documents")
     per = d.groupBy("source").agg(
         F.count("*").alias("n_docs"), F.sum("n_chars").alias("n_chars")

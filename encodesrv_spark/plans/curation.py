@@ -18,17 +18,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from encodesrv_spark.catalog import load_table, table_rows
+from encodesrv_spark.functions.text import TOKS_NE_SQL, tokens_ne
 from encodesrv_spark.operators import dedup, similarity
 from encodesrv_spark.plans.corpus import (
     _DOC_SHINGLES5,
     _kmeans_assign_sql,
     _kmeans_update_sql,
-    _tokens_ne,
-    _TOKS_NE,
 )
 from encodesrv_spark.plans.llm import _SHINGLES3, _SIG8
 from encodesrv_spark.plans.registry import register
-from encodesrv_spark.session import prep
 
 _EMB = "SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings"
 
@@ -47,12 +45,12 @@ _STOPWORDS = ("the", "a", "of", "and", "to", "in", "is")
     oracle=f"""
         WITH m AS (
             SELECT doc_id,
-                   len({_TOKS_NE})::BIGINT AS n_words,
+                   len({TOKS_NE_SQL})::BIGINT AS n_words,
                    round(length(regexp_replace(text, '\\s', '', 'g')) * 1.0
-                         / len({_TOKS_NE}), 4) AS mean_wlen,
-                   round(len(list_distinct({_TOKS_NE})) * 1.0
-                         / len({_TOKS_NE}), 4) AS ttr,
-                   len(list_distinct(list_filter({_TOKS_NE},
+                         / len({TOKS_NE_SQL}), 4) AS mean_wlen,
+                   round(len(list_distinct({TOKS_NE_SQL})) * 1.0
+                         / len({TOKS_NE_SQL}), 4) AS ttr,
+                   len(list_distinct(list_filter({TOKS_NE_SQL},
                        t -> t IN {_STOPWORDS!r})))::BIGINT AS n_stop_types
             FROM documents
         )
@@ -76,9 +74,8 @@ def gopher_quality_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     document-level filter step every pre-training pipeline runs before
     dedup.  Pure per-row expressions: zero shuffles, whole-stage
     codegen end to end, filters push to the scan when composed."""
-    prep(spark)
     d = dedup.fan_out(load_table(spark, sf_dir, "documents"))
-    toks = _tokens_ne()
+    toks = tokens_ne()
     n_words = F.size(toks).cast("long")
     mean_wlen = F.round(
         F.length(F.regexp_replace("text", r"\s", "")) * F.lit(1.0) / n_words, 4
@@ -111,7 +108,7 @@ def gopher_quality_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "bpe_pair_stats",
     oracle=f"""
-        WITH d AS (SELECT {_TOKS_NE} AS t FROM documents),
+        WITH d AS (SELECT {TOKS_NE_SQL} AS t FROM documents),
         p AS (
             SELECT t[i] || ' ' || t[i + 1] AS pair
             FROM d, LATERAL (
@@ -132,10 +129,9 @@ def bpe_pair_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial-aggregated on the pair key, and the top-20 is
     TakeOrderedAndProject over the vocab²-bounded aggregate, never a
     global sort of the corpus."""
-    prep(spark)
     d = (
         dedup.fan_out(load_table(spark, sf_dir, "documents"))
-        .select(_tokens_ne().alias("t"))
+        .select(tokens_ne().alias("t"))
         .filter(F.size("t") >= 2)
     )
     # Spark SQL array indexing is 0-based (DuckDB's is 1-based): the
@@ -158,7 +154,7 @@ def _pairs_sql(src: str) -> str:
     a `text` column) — shared by bpe_pair_stats and bpe_merge_step."""
     return f"""
             SELECT t[i] || ' ' || t[i + 1] AS pair
-            FROM (SELECT {_TOKS_NE} AS t FROM {src}), LATERAL (
+            FROM (SELECT {TOKS_NE_SQL} AS t FROM {src}), LATERAL (
                 SELECT unnest(generate_series(1, len(t) - 1)) AS i
             )
     """
@@ -195,11 +191,10 @@ def bpe_merge_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-count is a second corpus scan whose filter constant Spark
     evaluates once.  Both passes keep the map-side-combined
     pair-count shape of bpe_pair_stats."""
-    prep(spark)
     docs = dedup.fan_out(load_table(spark, sf_dir, "documents"))
 
     def pair_counts(frame: DataFrame) -> DataFrame:
-        d = frame.select(_tokens_ne().alias("t")).filter(F.size("t") >= 2)
+        d = frame.select(tokens_ne().alias("t")).filter(F.size("t") >= 2)
         return (
             d.select(
                 F.explode(
@@ -245,7 +240,7 @@ def bpe_merge_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     "token_zipf_fit",
     oracle=f"""
         WITH tok AS (
-            SELECT unnest({_TOKS_NE}) AS w FROM documents
+            SELECT unnest({TOKS_NE_SQL}) AS w FROM documents
         ),
         freq AS (SELECT w, count(*)::BIGINT AS cnt FROM tok GROUP BY w),
         ranked AS (
@@ -270,10 +265,9 @@ def token_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs over the vocab-sized ranked frame as single-pass moment
     sketches (regr_*), and the rank window sorts vocab rows, never
     corpus rows."""
-    prep(spark)
     tok = (
         dedup.fan_out(load_table(spark, sf_dir, "documents"))
-        .select(F.explode(_tokens_ne()).alias("w"))
+        .select(F.explode(tokens_ne()).alias("w"))
     )
     freq = tok.groupBy("w").agg(F.count("*").alias("cnt"))
     from pyspark.sql import Window as W
@@ -353,7 +347,6 @@ def embedding_jl_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     is 16 per-row dot products inside whole-stage codegen — zero
     shuffles, zero joins, no Python.  The oracle's (i,j) join form is
     the same arithmetic, just unrolled relationally."""
-    prep(spark)
     e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", similarity._as_double("embedding").alias("emb")
     )
@@ -406,7 +399,6 @@ def neardup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     inverted-index self-join and df-cap machinery with neardup_jaccard;
     only the normalization differs.  The planted-inclusion unit test
     pins the asymmetric case this corpus's exact-copy dups can't."""
-    prep(spark)
     return dedup.containment_pairs(
         load_table(spark, sf_dir, "documents"),
         k=3,
@@ -447,7 +439,6 @@ def source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB a df-cap on universally-shared shingles (the jaccard_pairs
     stop-shingle rule) bounds the hot keys; at test SF every shingle
     is under any sane cap."""
-    prep(spark)
     d = (
         dedup.fan_out(load_table(spark, sf_dir, "documents"))
         .select(
@@ -501,7 +492,6 @@ def embedding_dim_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     posexplode + one (dim)-keyed aggregate, partially aggregated
     map-side: the shuffle carries 64 moment tuples per partition, and
     the output is dims-sized regardless of corpus size."""
-    prep(spark)
     e = load_table(spark, sf_dir, "embeddings").select(
         similarity._as_double("embedding").alias("emb")
     )
@@ -609,7 +599,6 @@ def embedding_jl_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     hot and scan, and only the shortlist (queries × 10 rows) ever
     touches full-precision vectors, via a key-lookup join AQE turns
     into a broadcast of the shortlist side."""
-    prep(spark)
     return jl_ann(load_table(spark, sf_dir, "embeddings"))
 
 
@@ -732,7 +721,6 @@ def semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     form degraded to at scale (round-3 verdict).  At the driver's
     sf0.01 (n=500) the derived k is exactly 8, keeping the oracle's
     unrolled Lloyd CTEs on the same seed set as before."""
-    prep(spark)
     return similarity.semdedup(
         load_table(spark, sf_dir, "embeddings"),
         k=8,
@@ -781,7 +769,6 @@ def corpus_train_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast back as a 1-row frame (never a global percent_rank sort);
     the only window is per-shard, so each partition sorts its own
     shard — no global ordering of the corpus anywhere."""
-    prep(spark)
     from pyspark.sql import Window as W
 
     from encodesrv_spark.functions.hashing import stable_hash64
@@ -894,7 +881,6 @@ def minhash_estimate_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     the remaining cost is the exact-Jaccard audit arm's df-capped
     inverted-index self-join, which is the thing this query exists to
     measure the estimator against."""
-    prep(spark)
     docs = load_table(spark, sf_dir, "documents")
     hashed = dedup.hashed_shingles(docs, k=3).localCheckpoint(eager=True)
     sig = dedup.minhash_signatures(
@@ -982,7 +968,6 @@ def simhash_hamming_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     guarantee is exact (no false negatives) up to distance 3.  See
     operators/dedup.simhash_hamming_pairs for the block-width scale
     knob."""
-    prep(spark)
     return dedup.simhash_hamming_pairs(
         load_table(spark, sf_dir, "documents"), bits=32, max_hamming=2, n_blocks=4
     )
@@ -1055,7 +1040,6 @@ def embedding_density_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     noise.  The variable-shape/variable-count complement to k-means
     (no k parameter).  See operators/similarity.density_clusters for
     the composition and scale accounting."""
-    prep(spark)
     return similarity.density_clusters(
         load_table(spark, sf_dir, "embeddings"), threshold=0.25, min_pts=2
     )

@@ -19,7 +19,6 @@ from encodesrv_spark.functions.exact import (
     money_round,
 )
 from encodesrv_spark.plans.registry import register
-from encodesrv_spark.session import prep
 
 
 def _rev_sum():
@@ -63,7 +62,6 @@ def asof_join_purchases(spark: SparkSession, sf_dir: str) -> DataFrame:
     distributed as-of pattern (an actual join would be quadratic on
     hot users).  Ties on tus break by event_id (larger wins), matching
     the oracle's DESC ordering."""
-    prep(spark)
     e = load_table(spark, sf_dir, "events").withColumn("tus", F.expr("ts_ns DIV 1000"))
     both = e.filter(F.col("event_type").isin("purchase", "signup")).select(
         "event_id", "user_id", "event_type", "tus"
@@ -141,7 +139,6 @@ def click_attribution_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     filters band-mates outside the horizon.  All output cells are
     exact integers (ids, epoch-micros) or raw column passthrough —
     nothing engine-rounded."""
-    prep(spark)
     h = _ATTR_HORIZON_US
     e = load_table(spark, sf_dir, "events").withColumn(
         "tus", F.expr("ts_ns DIV 1000")
@@ -208,7 +205,6 @@ def click_attribution_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
 def rollup_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROLLUP hierarchy totals with grouping-id disambiguation — the
     multi-level aggregate family the reference has no analog for."""
-    prep(spark)
     l = load_table(spark, sf_dir, "lineitem")
     return (
         l.rollup("l_returnflag", "l_linestatus")
@@ -250,7 +246,6 @@ def pivot_linestatus(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact_sum expression rides inside the pivot aggregate — pivot
     cells whose (flag, status) pair never occurs stay NULL and
     coalesce to 0 in exact decimal space before the one round/cast)."""
-    prep(spark)
     l = load_table(spark, sf_dir, "lineitem")
     return (
         l.groupBy("l_returnflag")
@@ -283,7 +278,6 @@ def order_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXCEPT / INTERSECT / UNION ALL in one query (§2.6 'absent' in
     the reference).  Catalyst plans except/intersect as anti/semi hash
     joins on the distinct sets."""
-    prep(spark)
     o = load_table(spark, sf_dir, "orders")
 
     def year(y: int) -> DataFrame:
@@ -316,7 +310,6 @@ def order_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
 def distinct_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact multi-column COUNT(DISTINCT) — Catalyst expands to the
     expand+two-phase aggregate plan automatically."""
-    prep(spark)
     o = load_table(spark, sf_dir, "orders")
     return o.groupBy("o_orderstatus").agg(
         F.countDistinct("o_custkey").alias("n_customers"),
@@ -374,7 +367,6 @@ def approx_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     Exact twins for the raw values: distinct_stats / q1.  Cost: sketch
     scan + audit scans (exact-NDV pass and the rank check of the three
     quantile values against a group-sized broadcast)."""
-    prep(spark)
     l = load_table(spark, sf_dir, "lineitem")
     sketch = l.groupBy("l_returnflag").agg(
         F.count("*").alias("n_rows"),
@@ -463,7 +455,6 @@ def skew_salted_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape is what changes.  (For *joins* on skewed keys, AQE skew-join
     splitting is on via session conf — this pattern covers aggregation
     skew, which AQE does not rebalance.)"""
-    prep(spark)
     l = load_table(spark, sf_dir, "lineitem")
     salted = l.withColumn("salt", F.pmod(F.xxhash64("l_orderkey"), F.lit(16)))
     partial = salted.groupBy("l_returnflag", "salt").agg(
@@ -512,7 +503,6 @@ def price_band_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket-prefiltering: explode intervals over coarse buckets,
     equi-join on bucket, then refine the range predicate — same
     composition, one extra explode stage.)"""
-    prep(spark)
     o = load_table(spark, sf_dir, "orders")
     bands = spark.createDataFrame(_BANDS, "band string, lo double, hi double")
     return (
@@ -552,7 +542,6 @@ def skew_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     plain join).  This is the fallback when AQE skew splitting can't
     fire — e.g. a broadcast-inelegible mid-size dim or a streaming
     join; NSALT here is 8, sized to the executor count at scale."""
-    prep(spark)
     NSALT = 8
     c = load_table(spark, sf_dir, "customer").withColumn(
         "salt", (F.col("c_custkey") % NSALT).cast("int")
@@ -586,25 +575,27 @@ def skew_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("extended", "sql"),
 )
 def sql_revenue_by_region(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The plain-SQL surface: identical ANSI SQL runs on Spark (over
-    `catalog.register_views`) and on the DuckDB oracle — users who
-    query the reference's Postgres in SQL keep writing SQL here, same
-    Catalyst plan as the DataFrame form (broadcast dims, partial agg)."""
-    prep(spark)
-    from encodesrv_spark.catalog import register_views
-
-    register_views(spark, sf_dir)
-    return spark.sql("""
+    """The plain-SQL surface: identical ANSI SQL runs on Spark and on
+    the DuckDB oracle — users who query the reference's Postgres in SQL
+    keep writing SQL here, same Catalyst plan as the DataFrame form
+    (broadcast dims, partial agg).  The tables are passed as
+    `spark.sql` keyword frames, which PySpark binds to uniquely named
+    views for analysis only, so a run leaves the session's temp views
+    as it found them."""
+    return spark.sql(
+        """
         SELECT r.r_name,
                count(DISTINCT c.c_custkey) AS n_customers,
                CAST(round(sum(CAST(o.o_totalprice AS DECIMAL(12,2))), 2)
                     AS DOUBLE) AS total_revenue
-        FROM region r
-        JOIN nation n ON n.n_regionkey = r.r_regionkey
-        JOIN customer c ON c.c_nationkey = n.n_nationkey
-        JOIN orders o ON o.o_custkey = c.c_custkey
+        FROM {region} r
+        JOIN {nation} n ON n.n_regionkey = r.r_regionkey
+        JOIN {customer} c ON c.c_nationkey = n.n_nationkey
+        JOIN {orders} o ON o.o_custkey = c.c_custkey
         GROUP BY r.r_name
-    """)
+        """,
+        **{t: load_table(spark, sf_dir, t) for t in ("region", "nation", "customer", "orders")},
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -646,7 +637,6 @@ def funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     and every shuffle shares the user_id key (one exchange per stage,
     all co-partitioned).  Timestamps compared as epoch-us integers —
     zero cross-engine float/timezone risk."""
-    prep(spark)
     e = load_table(spark, sf_dir, "events").select(
         "user_id", "event_type", F.expr("ts_ns DIV 1000").alias("tus")
     )
@@ -710,7 +700,6 @@ def cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     user_id exchange with the distinct count, so the plan is two
     user-keyed aggregates around one join — AQE picks broadcast when
     the user dimension fits, plain shuffle join when it doesn't."""
-    prep(spark)
     e = load_table(spark, sf_dir, "events").select(
         "user_id", F.expr("(ts_ns DIV 1000) DIV 86400000000").alias("day")
     )
@@ -787,7 +776,6 @@ def trade_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     data.  For graphs too large to broadcast, the same loop runs with
     hash joins + per-iteration localCheckpoint (the dedup_clusters
     pattern); the oracle unrolls the identical three steps as CTEs."""
-    prep(spark)
     l = load_table(spark, sf_dir, "lineitem")
     o = load_table(spark, sf_dir, "orders")
     c = load_table(spark, sf_dir, "customer")
@@ -870,7 +858,6 @@ def error_rate_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     share over the event stream with an alert flag.  One partial-
     aggregated groupBy on epoch-hour integers; the streaming twin is
     hourly_counts + a filter on the rate."""
-    prep(spark)
     e = load_table(spark, sf_dir, "events").select(
         F.expr("(ts_ns DIV 1000) DIV 3600000000").alias("hour_id"), "event_type"
     )
@@ -924,7 +911,6 @@ def value_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the sd denominator route through nullif, so degenerate types
     (one event, zero variance) yield NULL z and drop out of the |z|
     filter identically on both engines — the events_cusum template."""
-    prep(spark)
     e = load_table(spark, sf_dir, "events")
     m = e.groupBy("event_type").agg(
         F.count("*").alias("n"),
@@ -977,7 +963,6 @@ def bloom_prune_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     are JVM expressions inside codegen — no Python, no driver collect."""
     from encodesrv_spark.operators.bloom import bloom_prune
 
-    prep(spark)
     o = (
         load_table(spark, sf_dir, "orders")
         .filter(F.col("o_orderpriority") == "1-URGENT")
@@ -1024,7 +1009,6 @@ def bloom_prune_selective(spark: SparkSession, sf_dir: str) -> DataFrame:
     followed by the exact join."""
     from encodesrv_spark.operators.bloom import bloom_prune
 
-    prep(spark)
     o = (
         load_table(spark, sf_dir, "orders")
         .filter(F.col("o_orderkey") % 128 == 0)
@@ -1165,7 +1149,6 @@ def bucketed_colocated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle is the plain join on the raw parquet: the bucketed copy is
     a pure re-layout, so results must match exactly; revenue is the
     exact decimal money sum."""
-    prep(spark)
     ob = _bucketed_copy(
         spark, sf_dir, "orders", "o_orderkey", ["o_orderkey", "o_orderstatus"]
     )
@@ -1257,7 +1240,6 @@ def events_zorder_box_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle runs the same box on the RAW table: the clustered copy
     is a pure re-layout, so results must match exactly; the money sum
     is the exact cents path."""
-    prep(spark)
     z = _zorder_events_copy(spark, sf_dir)
     return (
         z.filter(
@@ -1342,7 +1324,6 @@ def events_zorder_append_maintain(spark: SparkSession, sf_dir: str) -> DataFrame
     and maintenance are all pure re-layouts of a row partition of
     events, so results must match exactly; the money sum is the exact
     cents path."""
-    prep(spark)
     z = _zorder_maintained_events(spark, sf_dir)
     return (
         z.filter(
@@ -1438,7 +1419,6 @@ def part_scd2_price_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     change detection is null-safe equality on both sides."""
     from encodesrv_spark.operators.scd import scd2_apply, scd2_init
 
-    prep(spark)
     dim = load_table(spark, sf_dir, "part").select(
         "p_partkey", "p_brand", "p_retailprice"
     )
@@ -1570,7 +1550,6 @@ def part_scd2_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact cents path."""
     from encodesrv_spark.operators.scd import scd2_apply, scd2_init
 
-    prep(spark)
     dim = load_table(spark, sf_dir, "part").select(
         "p_partkey", "p_brand", "p_retailprice"
     )
@@ -1687,7 +1666,6 @@ def part_scd2_cdc_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         scd2_init,
     )
 
-    prep(spark)
     dim = load_table(spark, sf_dir, "part").select(
         "p_partkey", "p_brand", "p_retailprice"
     )
@@ -1798,7 +1776,6 @@ def events_moving_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle's budget to ~4.6e12 frame-cents, asymmetric to the Spark
     twin's.  The only float op left is one correctly-rounded
     ≤1e9-integer→double cast and one /1e6."""
-    prep(spark)
     e = load_table(spark, sf_dir, "events").withColumn(
         "tsec", F.expr("ts_ns DIV 1000000000")
     )
@@ -1865,7 +1842,6 @@ def events_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-identical cross-engine before the 6 dp round.  One shuffle
     (event_type), one sort per partition — the same profile as the
     moving-average window."""
-    prep(spark)
     e = load_table(spark, sf_dir, "events").select(
         "event_id",
         "event_type",
@@ -1958,7 +1934,6 @@ def regression_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver-testable regime sits far below 2^64 where both casts are
     exact; at 100 TB the oracle engine itself is out of scope and
     Spark's correctly-rounded cast is the defensible one."""
-    prep(spark)
     l = load_table(spark, sf_dir, "lineitem")
     xu = _units("l_quantity", 0)
     m = l.groupBy("l_returnflag").agg(
@@ -2025,7 +2000,6 @@ def event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     sequences (lead over the per-user time order, event_id tiebreak);
     the count matrix is (types × types)-sized, so the row-normalizing
     window runs on a tiny aggregate, not the event stream."""
-    prep(spark)
     e = load_table(spark, sf_dir, "events").withColumn(
         "tus", F.expr("ts_ns DIV 1000")
     )
@@ -2084,7 +2058,6 @@ def value_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     Both engines share the continuous-interpolation percentile
     definition (the `token_quantiles` parity rule) and the score is
     rounded before thresholding (the fp rule)."""
-    prep(spark)
     e = load_table(spark, sf_dir, "events")
     # both stats tables are type-cardinality — materialize each so the
     # final pass is exactly the second fact scan (exact percentiles are
@@ -2139,7 +2112,6 @@ def incremental_hourly_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from encodesrv_spark.operators import incremental as I
 
-    prep(spark)
     cutoff = 473712  # mid-range epoch hour; base ≈ history, delta ≈ new batch
     e = (
         load_table(spark, sf_dir, "events")
@@ -2202,7 +2174,6 @@ def incremental_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     97-141) rather than re-scanning the queue."""
     from encodesrv_spark.operators.incremental import join_view_delta
 
-    prep(spark)
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority"
     )
@@ -2277,7 +2248,6 @@ def incremental_join_view_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-batch.  Exact decimal sums per functions/exact.py."""
     from encodesrv_spark.operators.incremental import join_view_delta_signed
 
-    prep(spark)
     one = F.lit(1).cast("long")
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority"
@@ -2336,7 +2306,6 @@ def trending_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the streaming twin (`streaming/events.py:trending_counts`)
     produce byte-identical keys.  The per-window rank runs on the
     (windows × types) aggregate — WindowGroupLimit-prunable, tiny."""
-    prep(spark)
     e = load_table(spark, sf_dir, "events").withColumn(
         "wstart", F.expr("(ts_ns DIV 1000000000 DIV 600) * 600")
     )
@@ -2365,7 +2334,6 @@ def order_value_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     order' primitive).  Both are rank ratios over the partition's row
     count: one sort per partition, no second pass, and ties share a
     value exactly in both engines (integer rank arithmetic)."""
-    prep(spark)
     o = load_table(spark, sf_dir, "orders")
     w = W.partitionBy("o_orderpriority").orderBy("o_totalprice")
     return o.select(
@@ -2411,7 +2379,6 @@ def ab_test_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     exists), conversion = did the user ever purchase.  Per-arm rates
     from two user-cardinality aggregates; a significance test is
     driver-side arithmetic on this 2-row result."""
-    prep(spark)
     from encodesrv_spark.functions.hashing import stable_hash64
 
     e = load_table(spark, sf_dir, "events")
@@ -2470,7 +2437,6 @@ def nation_top_customer_concat(spark: SparkSession, sf_dir: str) -> DataFrame:
     — so the order is pinned by collecting (rank, name) structs and
     array_sort-ing BEFORE the join; the per-nation top-5 itself is a
     WindowGroupLimit-prunable ranked filter."""
-    prep(spark)
     c = load_table(spark, sf_dir, "customer")
     n = load_table(spark, sf_dir, "nation")
     w = W.partitionBy("n_name").orderBy(F.desc("c_acctbal"), F.asc("c_custkey"))
@@ -2519,7 +2485,6 @@ def lineitem_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     the inverse of `pivot_linestatus`.  Spark's `unpivot` expands
     in-place (an Expand node, no shuffle, no UDF); row identity is
     (orderkey, linenumber) so the long form keys deterministically."""
-    prep(spark)
     l = load_table(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") < 100)
     return (
         l.select(
@@ -2582,7 +2547,6 @@ def lineitem_dq_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference's per-row try/except → 'Error' status."""
     from encodesrv_spark.operators.quality import audit
 
-    prep(spark)
     l = load_table(spark, sf_dir, "lineitem")
     rules = {
         "null_orderkey": F.col("l_orderkey").isNull(),
@@ -2631,7 +2595,6 @@ def events_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     resolve inside the same map-side-combinable aggregate as high/low
     (the oracle's two row_number windows express the identical
     first/last semantics; ties break on event_id in both)."""
-    prep(spark)
     e = load_table(spark, sf_dir, "events").select(
         "event_type",
         F.expr("ts_ns DIV 3600000000000").alias("hr"),
@@ -2683,7 +2646,6 @@ def supplier_pareto_abc(spark: SparkSession, sf_dir: str) -> DataFrame:
     supplier-cardinality result, entirely in EXACT decimals (sum, rank
     key, and cumulative sum), so both engines accumulate identical
     values and only the final share division happens in double."""
-    prep(spark)
     l = load_table(spark, sf_dir, "lineitem")
     rev = l.groupBy("l_suppkey").agg(_rev_sum().alias("v"))
     tot = rev.agg(F.sum("v").cast("double").alias("tot"))
@@ -2739,7 +2701,6 @@ def basket_part_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     co-partition and the quadratic term stays local to each small
     group.  Part marginals are part-cardinality (sf-scaled), so their
     joins carry no hint — AQE broadcasts at test scale only."""
-    prep(spark)
     l = load_table(spark, sf_dir, "lineitem")
     li = l.select("l_orderkey", "l_partkey").distinct().localCheckpoint(eager=True)
     n = li.agg(F.countDistinct("l_orderkey").alias("n_orders"))
@@ -2812,7 +2773,6 @@ def daily_journey_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     nondeterministic-collect_list trap `nation_top_customer_concat`
     documents — and the path table aggregates from user-day
     cardinality, not event cardinality."""
-    prep(spark)
     e = load_table(spark, sf_dir, "events").select(
         "user_id",
         F.expr("ts_ns DIV 86400000000000").alias("day"),
@@ -2883,7 +2843,6 @@ def funnel_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
     checkpointed; `c` has exactly one consumer and materializing it
     was one serialized job per execution for zero avoided recompute
     (r11; jobs/execution 11 → 9, stages 16 → 13)."""
-    prep(spark)
     e = load_table(spark, sf_dir, "events").select(
         "user_id", "event_type", F.expr("ts_ns DIV 1000").alias("tus")
     )
@@ -2949,7 +2908,6 @@ def hourly_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     from epoch-hour modulo 24 — pure integer arithmetic, no calendar
     functions, so both engines bucket identically regardless of
     session timezone."""
-    prep(spark)
     e = load_table(spark, sf_dir, "events")
     return (
         e.withColumn("hour_of_day", F.expr("(ts_ns DIV 3600000000000) % 24"))
@@ -3026,7 +2984,6 @@ def part_copurchase_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges point INTO it.  Graph building reuses the basket self-join
     (baskets co-partition on l_orderkey; the quadratic term stays
     within each small order)."""
-    prep(spark)
     l = load_table(spark, sf_dir, "lineitem")
     li = l.select("l_orderkey", "l_partkey").distinct().localCheckpoint(eager=True)
     a = li.alias("a")
@@ -3198,7 +3155,6 @@ def part_label_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     iteration's lineage flat (the dedup_clusters rule); rounds are
     fixed, not run-to-fixpoint, which bounds the cost and sidesteps
     synchronous LPA's oscillation pathology."""
-    prep(spark)
     e = _copurchase_edges(spark, sf_dir)
     und = (
         e.select(F.col("p1").alias("u"), F.col("p2").alias("v"))
@@ -3277,7 +3233,6 @@ def part_local_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
     exploded to its three member nodes and counted per node.  The edge
     list and orientation are checkpointed once; no additional fact
     scans beyond the shared basket self-join."""
-    prep(spark)
     e = _copurchase_edges(spark, sf_dir)
     deg = (
         e.select(F.col("p1").alias("node"))
@@ -3397,7 +3352,6 @@ def part_edge_embeddedness(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-edge common-neighbor counts inherit the hub-safe bound.  The
     degree-1-endpoints denominator (d_a + d_b − 2 − common = 0) is
     nullif-guarded identically on both engines."""
-    prep(spark)
     e = _copurchase_edges(spark, sf_dir)
     deg = (
         e.select(F.col("p1").alias("node"))
@@ -3538,7 +3492,6 @@ def part_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate + one induced-subgraph semi-join pair, all keyed on
     node/edge ids, each round's edge set localCheckpoint'd (strictly
     shrinking, lineage flat)."""
-    prep(spark)
     e = _copurchase_edges(spark, sf_dir)
     cur = e.select("p1", "p2")
     for _ in range(_KCORE_ROUNDS):

@@ -23,7 +23,6 @@ from encodesrv_spark.functions.exact import (
 from encodesrv_spark.functions.hashing import km_hash64_sql, stable_hash64_sql
 from encodesrv_spark.operators import dedup, multimodal, similarity
 from encodesrv_spark.plans.registry import register
-from encodesrv_spark.session import prep
 
 # --- shared DuckDB fragments -------------------------------------------------
 
@@ -72,7 +71,6 @@ _SIG8 = (
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup: group by 128-bit content hash — the shuffle carries
     16-byte keys, not document bodies (100 TB posture)."""
-    prep(spark)
     return dedup.exact_dedup_groups(load_table(spark, sf_dir, "documents"))
 
 
@@ -110,7 +108,6 @@ def neardup_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     self-join — only co-shingled documents ever meet.  Corpus size for
     the df-cap census gate comes from the parquet footer (n_docs),
     not a count() job — one fewer serial Spark job per execution."""
-    prep(spark)
     return dedup.jaccard_pairs(
         load_table(spark, sf_dir, "documents"),
         k=3,
@@ -128,7 +125,6 @@ def neardup_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash signatures (8 hashes over 3-word shingles): constant-size
     sketch per document regardless of corpus size."""
-    prep(spark)
     return dedup.minhash_signatures(load_table(spark, sf_dir, "documents"), k=3, n_hashes=8)
 
 
@@ -154,7 +150,6 @@ def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH banding over MinHash signatures (4 bands × 2 hashes):
     candidate pairs only materialize inside matching band buckets."""
-    prep(spark)
     return dedup.minhash_lsh_pairs(
         load_table(spark, sf_dir, "documents"), k=3, n_hashes=8, band_size=2
     )
@@ -181,7 +176,6 @@ def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def simhash32(spark: SparkSession, sf_dir: str) -> DataFrame:
     """32-bit SimHash fingerprints (bitwise majority over token hashes);
     Hamming-near documents land on near-equal fingerprints."""
-    prep(spark)
     return dedup.simhash(load_table(spark, sf_dir, "documents"), bits=32)
 
 
@@ -216,7 +210,6 @@ _EMB = "SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings"
 def embedding_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-k (the exact baseline): broadcast query
     set, JVM-side zip_with/aggregate arithmetic, one pass over corpus."""
-    prep(spark)
     return similarity.brute_force_knn(
         load_table(spark, sf_dir, "embeddings"), n_query_vecs=8, k=5
     )
@@ -236,7 +229,6 @@ def embedding_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
 def embedding_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Random-hyperplane LSH bucket histogram — the partition/bucket key
     the ANN path joins on (deterministic planes, oracle-reproducible)."""
-    prep(spark)
     e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("emb")
     )
@@ -279,7 +271,6 @@ def embedding_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN: candidates restricted to the query's LSH bucket, exact
     cosine re-rank inside — the scale path (bucket id doubles as a
     write-time bucketing/partition key at 100 TB)."""
-    prep(spark)
     return similarity.lsh_ann(
         load_table(spark, sf_dir, "embeddings"), n_query_vecs=8, k=3
     )
@@ -309,7 +300,6 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup at O(bucket²) instead of O(N²).  Threshold 0.3 here because
     the synthetic embeddings are near-orthogonal (max in-bucket cosine
     ≈ 0.4); a real corpus would use ~0.9 (the operator default)."""
-    prep(spark)
     return similarity.cosine_neardup_pairs(
         load_table(spark, sf_dir, "embeddings"), threshold=0.3
     )
@@ -357,7 +347,6 @@ def _lang_case_sql() -> str:
 def lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stopword-profile language ID: per-language occurrence scores via
     regexp_count (codegen'd), deterministic argmax with fixed tie order."""
-    prep(spark)
     d = dedup.fan_out(load_table(spark, sf_dir, "documents"))
     out = d.select(
         "doc_id",
@@ -432,7 +421,6 @@ def quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     4-dp ties for many real inputs, so `round(double, 4)` split engines
     at sf0.1 — the same class the seasonality escalation fixed.  All
     arithmetic is BIGINT; `div` is Spark's integral divide."""
-    prep(spark)
     d = dedup.fan_out(load_table(spark, sf_dir, "documents"))
     toks = T.tokens("text")
     n_tokens = F.size(toks).cast("long")
@@ -477,7 +465,6 @@ def quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 def token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token counting: whitespace tokens + BPE-ish regex tokens
     (letter-runs / digit-runs / single punctuation)."""
-    prep(spark)
     d = dedup.fan_out(load_table(spark, sf_dir, "documents"))
     ws = F.size(T.tokens("text")).cast("long")
     # the BPE-ish pattern's three branches are disjoint character
@@ -521,7 +508,6 @@ def token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rolling 5-gram fingerprint: min-hash + xor-fold over shingle
     hashes — an order-insensitive content signature."""
-    prep(spark)
     d = load_table(spark, sf_dir, "documents")
     from encodesrv_spark.functions.hashing import stable_hash64
     from encodesrv_spark.functions.text import word_shingles
@@ -563,7 +549,6 @@ def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binary-column feature extraction through the real mapInPandas /
     Arrow path (decode stubbed deterministically — container has no
     codecs; see operators.multimodal.fake_decode_meta)."""
-    prep(spark)
     d = load_table(spark, sf_dir, "documents")
     return multimodal.extract_features(multimodal.documents_as_binary(d))
 
@@ -594,7 +579,6 @@ def multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     BOTH ENGINES to ASCII docs — byte length == char length, where the
     two slicings provably coincide — making the twin exact on any
     corpus, not just the current all-ASCII testdata."""
-    prep(spark)
     d = load_table(spark, sf_dir, "documents").filter(_ascii_only())
     return multimodal.sample_frames(multimodal.documents_as_binary(d))
 
@@ -618,7 +602,6 @@ def multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     mapInPandas; deterministic fake scale — 128×96 → 192-byte budget —
     checksummed so the oracle verifies the transform byte-exactly).
     ASCII-restricted twin, same rationale as multimodal_frames."""
-    prep(spark)
     d = load_table(spark, sf_dir, "documents").filter(_ascii_only())
     return multimodal.resize(multimodal.documents_as_binary(d), 128, 96)
 
@@ -642,7 +625,6 @@ def multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
 def events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling 1-hour aggregation — identical frame to the streaming
     window(ts, '1 hour') version in streaming/ (same grouping keys)."""
-    prep(spark)
     e = load_table(spark, sf_dir, "events")
     return (
         e.groupBy(
@@ -692,7 +674,6 @@ def events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     the precision both engines share), so the cross-engine comparison
     has zero float risk. The streaming twin is session_window(ts,
     '30 minutes') in streaming/."""
-    prep(spark)
     from pyspark.sql import Window as W
 
     e = load_table(spark, sf_dir, "events").withColumn(
@@ -743,7 +724,6 @@ def events_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semi-structured props: JSON field extraction + aggregation
     (get_json_object on Spark; the oracle proves the values, not the
     parser)."""
-    prep(spark)
     e = load_table(spark, sf_dir, "events")
     k = F.get_json_object("props", "$.k").cast("int")
     return e.groupBy("event_type").agg(
@@ -775,7 +755,6 @@ def events_hypertable_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     feed the day rows through partial aggregation — Catalyst's Expand
     + two-phase HashAggregate does precisely the cascade a hypertable
     maintains incrementally."""
-    prep(spark)
     e = load_table(spark, sf_dir, "events")
     day = F.date_trunc("day", "ts")
     hour = F.date_trunc("hour", "ts")
@@ -852,7 +831,6 @@ def embedding_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-rank inside — the inverted-file scale path complementing the
     LSH variant (cell id becomes the storage partition key at 100 TB,
     so a probe touches nprobe partitions)."""
-    prep(spark)
     return similarity.ivf_ann(
         load_table(spark, sf_dir, "embeddings"),
         n_query_vecs=8, k=3, n_centroids=16, nprobe=2,
@@ -899,7 +877,6 @@ def embedding_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     of d floats per vector (here 4 codes for 64 floats, a 64× byte
     shrink at int8 codebooks).  Rendered as a '_'-joined string key so
     the driver's canonicalizer never sees an array cell."""
-    prep(spark)
     enc = similarity.pq_encode(
         load_table(spark, sf_dir, "embeddings"), m=4, n_sub=16, dims=64
     )
@@ -947,7 +924,6 @@ def embedding_pq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     compressed exhaustive scan — every code is scored but the scan
     reads 4-byte codes, not 256-byte vectors; composes with IVF cells
     (probe subset) for a FAISS-style IVFPQ at 100 TB."""
-    prep(spark)
     return similarity.pq_ann(
         load_table(spark, sf_dir, "embeddings"),
         n_query_vecs=8, k=3, m=4, n_sub=16, dims=64,
@@ -987,7 +963,6 @@ def llm_corpus_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
     language token budget.  One shuffle for the dedup window (keyed on
     the 16-byte content hash, never the text) and one for the tiny
     final aggregate — the same plan shape a 100 TB corpus run needs."""
-    prep(spark)
     from pyspark.sql import Window as W
 
     d = dedup.fan_out(load_table(spark, sf_dir, "documents"))
@@ -1025,13 +1000,10 @@ def vocab_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     count) pairs — partial aggregation means corpus size only affects
     the scan, not the exchange; the final top-k is a
     TakeOrderedAndProject over the aggregated vocabulary."""
-    prep(spark)
     from pyspark.sql import Window as W
 
     d = dedup.fan_out(load_table(spark, sf_dir, "documents"))
-    toks = d.select(F.explode(T.tokens("text")).alias("tok")).filter(
-        F.col("tok") != ""
-    )
+    toks = d.select(F.explode(T.tokens_ne("text")).alias("tok"))
     counted = toks.groupBy("tok").agg(F.count("*").alias("n"))
     # limit-first: the top-100 is a per-partition heap merge
     # (TakeOrderedAndProject); the rnk window then runs over 100 rows
@@ -1062,7 +1034,6 @@ def text_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB this is a map-only stage with zero shuffle.  (DuckDB's
     regexp_replace needs the 'g' flag for replace-all parity with
     Spark.)"""
-    prep(spark)
     d = dedup.fan_out(load_table(spark, sf_dir, "documents"))
     url = r"https?://[^\s]+"
     email = r"[a-zA-Z0-9_.]+@[a-zA-Z0-9.]+"
@@ -1126,11 +1097,10 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     checkpointing; the oracle computes the same components with a
     recursive CTE — an iterative-algorithm operator (see also
     trade_pagerank) that still hash-matches exactly."""
-    prep(spark)
     pairs = dedup.minhash_lsh_pairs(
         load_table(spark, sf_dir, "documents"), k=3, n_hashes=8, band_size=2
     )
-    return dedup.connected_components(pairs, pairs_distinct=True)
+    return dedup.connected_components(pairs)
 
 
 _SPLIT_H = stable_hash64_sql("concat('split:', doc_id::VARCHAR)") + " % 100"
@@ -1159,7 +1129,6 @@ def corpus_sample_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     (RNG-based df.sample is none of those).  This is how corpus splits
     must be done at 100 TB: no shuffle, no state, any worker can
     re-derive any document's split."""
-    prep(spark)
     from encodesrv_spark.functions.hashing import stable_hash64
 
     d = load_table(spark, sf_dir, "documents")
@@ -1192,7 +1161,6 @@ def corpus_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-mod thresholds.  Same properties as the split op: exact,
     reproducible, shuffle-free; the 100 TB path to a balanced training
     mix."""
-    prep(spark)
     from encodesrv_spark.functions.hashing import stable_hash64
 
     d = load_table(spark, sf_dir, "documents")
@@ -1239,7 +1207,6 @@ def corpus_pack_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the global bin id is (bucket, local_bin).  One window over
     (bucket, doc_id) order — no global sort, no single-partition
     bottleneck."""
-    prep(spark)
     from pyspark.sql import Window as W
 
     from encodesrv_spark.functions.hashing import stable_hash64
@@ -1292,7 +1259,6 @@ def lang_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     The matrix is langs^2-bounded, so after the map-side scoring pass
     everything downstream is dimension-sized; the window runs on the
     already-aggregated frame, not the corpus."""
-    prep(spark)
     d = dedup.fan_out(load_table(spark, sf_dir, "documents"))
     p = d.select(
         F.col("lang").alias("labeled_lang"),
@@ -1349,11 +1315,10 @@ def neardup_removals(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus against this table; at 100 TB the list is duplicates-sized
     (a small fraction of the corpus) and joins on the compact doc_id
     key, never on content."""
-    prep(spark)
     pairs = dedup.minhash_lsh_pairs(
         load_table(spark, sf_dir, "documents"), k=3, n_hashes=8, band_size=2
     )
-    cc = dedup.connected_components(pairs, pairs_distinct=True)
+    cc = dedup.connected_components(pairs)
     return cc.filter(F.col("component") != F.col("doc_id")).select(
         "doc_id", F.col("component").alias("keeper_doc_id")
     )
@@ -1411,7 +1376,6 @@ def split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     at corpus scale); the split columns attach to the PAIRS output
     (duplicate-cardinality), so the post-dedup joins never touch
     corpus-scale data."""
-    prep(spark)
     from encodesrv_spark.functions.hashing import stable_hash64
 
     d = dedup.fan_out(load_table(spark, sf_dir, "documents"))
@@ -1497,10 +1461,9 @@ def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     The argmax is a per-cluster window on the cluster table
     (duplicate-cardinality), joined to document metadata only — the
     text itself never moves."""
-    prep(spark)
     docs = load_table(spark, sf_dir, "documents")
     pairs = dedup.minhash_lsh_pairs(docs, k=3, n_hashes=8, band_size=2)
-    cc = dedup.connected_components(pairs, pairs_distinct=True)
+    cc = dedup.connected_components(pairs)
     j = cc.join(docs.select("doc_id", "n_chars"), "doc_id")
     wc = W.partitionBy("component")
     wr = W.partitionBy("component").orderBy(F.desc("n_chars"), F.asc("doc_id"))
@@ -1596,7 +1559,6 @@ def embedding_ivfpq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     PQ codes shrink what's read to m bytes/vector).  Composes the
     verified `embedding_ivf_ann` cell machinery with the verified
     `embedding_pq_*` codebook."""
-    prep(spark)
     return similarity.ivfpq_ann(
         load_table(spark, sf_dir, "embeddings"),
         n_query_vecs=8, k=3, n_centroids=16, nprobe=2, m=4, n_sub=16, dims=64,
@@ -1668,7 +1630,6 @@ def embedding_mmr_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate set (aggregate-big/iterate-small).  The diversity-aware
     retrieval step of a RAG stack, sitting downstream of the ANN
     candidate generators."""
-    prep(spark)
     return similarity.mmr_select(
         load_table(spark, sf_dir, "embeddings"),
         query_vec_id=0, n_candidates=20, k=5, lam=0.7,
@@ -1735,7 +1696,6 @@ def ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     doesn't need the full corpus, just a representative slice); the
     ANN arm and the comparison join are bucket-pruned and
     result-sized."""
-    prep(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     exact = similarity.brute_force_knn(emb, n_query_vecs=8, k=3).select(
         "query_id", "neighbor_id"

@@ -46,12 +46,11 @@ from encodesrv_spark.functions.exact import (
     money_round,
 )
 from encodesrv_spark.functions.hashing import stable_hash64_sql
+from encodesrv_spark.functions.text import TOKS_NE_SQL, tokens_ne
 from encodesrv_spark.operators import dedup
 from encodesrv_spark.operators.similarity import _as_double, dot
-from encodesrv_spark.plans.corpus import _tokens_ne, _TOKS_NE
 from encodesrv_spark.plans.llm import _CLUSTERS_CTES, _EMB, _QUALITY_SQL, _SHINGLES3
 from encodesrv_spark.plans.registry import register
-from encodesrv_spark.session import prep
 
 
 # ---------------------------------------------------------------------------
@@ -63,7 +62,7 @@ from encodesrv_spark.session import prep
     "source_token_kl",
     oracle=f"""
         WITH tok AS (
-            SELECT source, unnest({_TOKS_NE}) AS t FROM documents
+            SELECT source, unnest({TOKS_NE_SQL}) AS t FROM documents
         ),
         c AS (
             SELECT source, t, count(*)::DOUBLE AS n FROM tok GROUP BY 1, 2
@@ -98,9 +97,8 @@ def source_token_kl(spark: SparkSession, sf_dir: str) -> DataFrame:
     The only real shuffle after the count is the counts⋈marginals join,
     co-keyed on token, vocab-sized not corpus-sized.  Checkpointed once
     because three consumers derive from it."""
-    prep(spark)
     d = dedup.fan_out(load_table(spark, sf_dir, "documents"))
-    tok = d.select("source", F.explode(_tokens_ne()).alias("t"))
+    tok = d.select("source", F.explode(tokens_ne()).alias("t"))
     c = (
         tok.groupBy("source", "t")
         .agg(F.count("*").cast("double").alias("n"))
@@ -147,7 +145,7 @@ _PMI_TOPK = 50
 @register(
     "token_bigram_pmi",
     oracle=f"""
-        WITH toks AS (SELECT doc_id, {_TOKS_NE} AS ts FROM documents),
+        WITH toks AS (SELECT doc_id, {TOKS_NE_SQL} AS ts FROM documents),
         bg AS (
             SELECT ts[i] AS a, ts[i + 1] AS b
             FROM toks, unnest(generate_series(1, len(ts) - 1)) AS u(i)
@@ -185,9 +183,8 @@ def token_bigram_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     float accumulation → deterministic across engines at 6 dp).
     Bigrams via zip(ts[0:n-1], ts[1:n]) — slice+zip rather than
     sequence() so empty/1-token docs yield zero rows on both engines."""
-    prep(spark)
     d = dedup.fan_out(load_table(spark, sf_dir, "documents"))
-    toks = d.select(_tokens_ne().alias("ts"))
+    toks = d.select(tokens_ne().alias("ts"))
     bg = toks.select(
         F.explode(
             F.expr(
@@ -240,7 +237,7 @@ def token_bigram_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     "doc_token_entropy",
     oracle=f"""
         WITH tok AS (
-            SELECT doc_id, unnest({_TOKS_NE}) AS t FROM documents
+            SELECT doc_id, unnest({TOKS_NE_SQL}) AS t FROM documents
         ),
         c AS (
             SELECT doc_id, t, count(*)::DOUBLE AS n FROM tok GROUP BY 1, 2
@@ -277,9 +274,8 @@ def doc_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     #types ≈ 10² O(1)-magnitude terms per doc, so 6 dp rounding is
     deterministic; single-type docs yield NULL norm_entropy on both
     sides (guarded division)."""
-    prep(spark)
     d = dedup.fan_out(load_table(spark, sf_dir, "documents"))
-    tok = d.select("doc_id", F.explode(_tokens_ne()).alias("t"))
+    tok = d.select("doc_id", F.explode(tokens_ne()).alias("t"))
     c = tok.groupBy("doc_id", "t").agg(F.count("*").cast("double").alias("n"))
     # per-doc totals derive from c via a window instead of a re-agg +
     # join: one shuffle on doc_id serves both the totals and the final
@@ -415,7 +411,6 @@ def embedding_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
     Determinism: codes are exact ints (identical IEEE doubles on both
     engines → identical round()); the MSE is an in-order array fold,
     bit-identical across engines before the 6 dp rounding."""
-    prep(spark)
     coded = _sq8_coded_frame(spark, sf_dir)
     return coded.select(
         "vec_id",
@@ -483,7 +478,6 @@ def embedding_sq8_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     query partition.  Dequantized values are exact IEEE expressions of
     exact ints, so approx_cos is bit-identical cross-engine before the
     4 dp rounding; ties break on neighbor_id."""
-    prep(spark)
     coded = _sq8_coded_frame(spark, sf_dir)
     # materialize the dequantized frame: projection collapse would
     # otherwise INLINE the transform chain (codes -> r) into every
@@ -584,7 +578,6 @@ def winsorize_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     clipped value a fixed 4-dp number — so both means are EXACT sums
     (value is probed 2-dp data) divided once in double, not
     order-dependent double accumulations."""
-    prep(spark)
     ev = load_table(spark, sf_dir, "events")
     p = ev.groupBy("event_type").agg(
         F.round(F.percentile("value", F.lit(_WINS_LO)), 4).alias("p_lo"),
@@ -688,7 +681,6 @@ def neardup_threshold_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     count, distinct flagged docs) reuse that materialized pair set.
     All-threshold rows are emitted even when empty (left join from the
     literal threshold frame) so the curve's domain is data-independent."""
-    prep(spark)
     docs = load_table(spark, sf_dir, "documents")
     pairs = dedup.jaccard_pairs(
         docs,
@@ -780,7 +772,6 @@ def contrastive_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines.  At 100 TB the scoring pass shards over the corpus
     unchanged; swap the brute-force scorer for the LSH/IVF shortlist
     (`embedding_ann_lsh`) when the query set itself scales."""
-    prep(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     e = emb.select(
         "vec_id", "label", _as_double("embedding").alias("emb")
@@ -833,7 +824,7 @@ _COV_CUTS = (100, 1000, 5000)
 @register(
     "token_coverage_curve",
     oracle=f"""
-        WITH tok AS (SELECT unnest({_TOKS_NE}) AS t FROM documents),
+        WITH tok AS (SELECT unnest({TOKS_NE_SQL}) AS t FROM documents),
         c AS (SELECT t, count(*)::BIGINT AS cnt FROM tok GROUP BY 1),
         tot AS (SELECT sum(cnt) AS n FROM c),
         ranked AS (
@@ -863,10 +854,9 @@ def token_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     grand total is a scalar from the same frequency frame (no second
     corpus pass).  Ties at a cut boundary break on the token string on
     both engines, so the curve is deterministic."""
-    prep(spark)
     d = dedup.fan_out(load_table(spark, sf_dir, "documents"))
     c = (
-        d.select(F.explode(_tokens_ne()).alias("t"))
+        d.select(F.explode(tokens_ne()).alias("t"))
         .groupBy("t")
         .agg(F.count("*").alias("cnt"))
         .localCheckpoint(eager=True)
@@ -960,7 +950,6 @@ def user_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-engine.  No ntile: a global ntile would single-partition the
     whole user table, while broadcast thresholds keep scoring
     embarrassingly parallel at any user count."""
-    prep(spark)
     ev = load_table(spark, sf_dir, "events")
     corpus_max = ev.agg(F.max(F.to_date("ts")).alias("mx"))
     is_p = F.col("event_type") == "purchase"
@@ -1085,7 +1074,6 @@ def events_change_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     the hourly mean and the delta volatility both derive from EXACT
     sums (value is 2-dp data, deltas are 6-dp-rounded), so no stage
     depends on double accumulation order."""
-    prep(spark)
     ev = load_table(spark, sf_dir, "events")
     h = ev.groupBy("event_type", F.date_trunc("hour", "ts").alias("hr")).agg(
         F.round(exact_sum("value").cast("double") / F.count("*"), 6).alias(
@@ -1161,7 +1149,7 @@ _TFIDF_SIM_MIN = 0.8
     oracle=f"""
         WITH tf AS (
             SELECT doc_id, tok, count(*)::BIGINT AS cnt
-            FROM (SELECT doc_id, unnest({_TOKS_NE}) AS tok FROM documents)
+            FROM (SELECT doc_id, unnest({TOKS_NE_SQL}) AS tok FROM documents)
             GROUP BY 1, 2
         ),
         df AS (SELECT tok, count(*) AS df FROM tf GROUP BY 1),
@@ -1204,10 +1192,9 @@ def tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     scores that matter.  Weights are rounded 6 dp BEFORE the pair
     products so cross-engine ln() ulps cannot move a similarity; the
     weighted frame feeds norms + both join sides from one checkpoint."""
-    prep(spark)
     d = dedup.fan_out(load_table(spark, sf_dir, "documents"))
     tf = (
-        d.select("doc_id", F.explode(_tokens_ne()).alias("tok"))
+        d.select("doc_id", F.explode(tokens_ne()).alias("tok"))
         .groupBy("doc_id", "tok")
         .agg(F.count("*").alias("cnt"))
     )
@@ -1296,7 +1283,6 @@ def embedding_norm_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     scoring — no window, no shuffle of the corpus itself.  The norm
     fold is in-order on both engines, and the median/MAD/z ladder is
     rounded 6/4 dp, so flags are deterministic."""
-    prep(spark)
     from encodesrv_spark.operators.similarity import sq_norm
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -1392,7 +1378,6 @@ def quality_percentile_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     zero-token nullif guard, and the engine DEFAULTS diverge (Spark
     ASC = NULLS FIRST, DuckDB ASC = NULLS LAST) — an unpinned NULL
     would shift every rank in its source."""
-    prep(spark)
     from encodesrv_spark.plans.llm import quality_score
 
     q = quality_score(spark, sf_dir).select("doc_id", "score")
@@ -1468,7 +1453,6 @@ def dedup_cluster_size_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     size-histogram aggregate — both tiny after the first groupBy.
     Clusters are ≥2 docs by construction (components of the pair
     graph), so removable = size − 1 per cluster."""
-    prep(spark)
     from encodesrv_spark.plans.llm import dedup_clusters
 
     comp = dedup_clusters(spark, sf_dir)
@@ -1550,7 +1534,6 @@ def embedding_top_pc(spark: SparkSession, sf_dir: str) -> DataFrame:
     6 dp before the next iteration consumes it, so the iteration is
     bit-stable cross-engine.  The eigenvalue estimate is ‖Xᵀ X v‖ of
     the final (unit) iterate."""
-    prep(spark)
     e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", _as_double("embedding").alias("emb")
     )
@@ -1630,7 +1613,7 @@ _BURST_TOPK = 30
     "token_burstiness",
     oracle=f"""
         WITH tok AS (
-            SELECT doc_id, unnest({_TOKS_NE}) AS t FROM documents
+            SELECT doc_id, unnest({TOKS_NE_SQL}) AS t FROM documents
         ),
         c AS (
             SELECT t,
@@ -1663,9 +1646,8 @@ def token_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     together (count + count-distinct over the same key — a single
     shuffle); the score is exact integer division rounded at 4 dp, and
     the top-k is a TakeOrdered over the support-filtered vocab frame."""
-    prep(spark)
     d = dedup.fan_out(load_table(spark, sf_dir, "documents"))
-    tok = d.select("doc_id", F.explode(_tokens_ne()).alias("t"))
+    tok = d.select("doc_id", F.explode(tokens_ne()).alias("t"))
     c = tok.groupBy("t").agg(
         F.count("*").alias("cf"),
         F.countDistinct("doc_id").alias("df"),
@@ -1744,7 +1726,6 @@ def doc_nearest_neighbor(spark: SparkSession, sf_dir: str) -> DataFrame:
     (doc, map partition) instead of every symmetrized pair, and the
     per-partition sort the window needed disappears (§2.3
     aggregate-before-shuffle; A/B identical 5000-row output)."""
-    prep(spark)
     docs = load_table(spark, sf_dir, "documents")
     pairs = dedup.jaccard_pairs(
         docs,
@@ -1845,7 +1826,6 @@ def order_seasonality_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     divergence class immediately.  Never sum raw doubles across rows:
     the summation-order drift is what cost this query its r04 driver
     row."""
-    prep(spark)
     o = load_table(spark, sf_dir, "orders")
     cents = F.round(F.col("o_totalprice") * 100).cast("long")
     m = (
@@ -1927,7 +1907,6 @@ def customer_order_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     summary is a |segments|-group aggregate.  The lag ordering ties on
     (date, orderkey) so same-day orders sequence identically on both
     engines; gaps are exact integer days."""
-    prep(spark)
     o = load_table(spark, sf_dir, "orders")
     w = W.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     gaps = (
@@ -2002,7 +1981,6 @@ def copurchase_degree_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     DEGREE-histogram frame — at most max-degree rows — so the running
     CCDF window's single partition holds a bounded-tiny frame, not the
     node set."""
-    prep(spark)
     from encodesrv_spark.plans.extended import _copurchase_edges
 
     e = _copurchase_edges(spark, sf_dir)
@@ -2039,7 +2017,7 @@ _LM_K = 0.5  # add-k smoothing; dyadic so both engines share it exactly
 @register(
     "bigram_lm_perplexity",
     oracle=f"""
-        WITH toks AS (SELECT doc_id, {_TOKS_NE} AS ts FROM documents),
+        WITH toks AS (SELECT doc_id, {TOKS_NE_SQL} AS ts FROM documents),
         bg AS (
             SELECT doc_id, ts[i] AS a, ts[i + 1] AS b
             FROM toks, unnest(generate_series(1, len(ts) - 1)) AS u(i)
@@ -2081,9 +2059,8 @@ def bigram_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     on a.  k = 0.5 is dyadic, log terms are summed per doc (≤ doc
     length, O(1) magnitudes → 4 dp rounding deterministic), and the
     perplexity derives from the ROUNDED logprob on both engines."""
-    prep(spark)
     d = dedup.fan_out(load_table(spark, sf_dir, "documents"))
-    toks = d.select("doc_id", _tokens_ne().alias("ts"))
+    toks = d.select("doc_id", tokens_ne().alias("ts"))
     bg = (
         toks.select(
             "doc_id",
@@ -2145,7 +2122,7 @@ _FH_DIM = 64
     "doc_hash_features",
     oracle=f"""
         WITH tok AS (
-            SELECT doc_id, unnest({_TOKS_NE}) AS t FROM documents
+            SELECT doc_id, unnest({TOKS_NE_SQL}) AS t FROM documents
         ),
         hashed AS (
             SELECT doc_id,
@@ -2182,11 +2159,10 @@ def doc_hash_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     come from the hash's next bit, so collisions cancel in expectation
     (the trick's variance bound).  Sums are exact integers in double
     form; norms are rounded at 4 dp."""
-    prep(spark)
     from encodesrv_spark.functions.hashing import stable_hash64
 
     d = dedup.fan_out(load_table(spark, sf_dir, "documents"))
-    tok = d.select("doc_id", F.explode(_tokens_ne()).alias("t"))
+    tok = d.select("doc_id", F.explode(tokens_ne()).alias("t"))
     hashed = tok.withColumn("h", F.abs(stable_hash64("t"))).select(
         "doc_id",
         (F.col("h") % _FH_DIM).alias("bucket"),
@@ -2288,7 +2264,6 @@ def referential_integrity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     count passes over the materialized key columns; the footer
     metadata read costs ~0.2 ms per table and is re-read from the
     input on every invocation."""
-    prep(spark)
     l = load_table(spark, sf_dir, "lineitem")
     o = load_table(spark, sf_dir, "orders")
     c = load_table(spark, sf_dir, "customer")
@@ -2389,7 +2364,6 @@ def revenue_trend_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     constant, regardless of whether the fact table is 60k rows or
     100 TB.  Monthly revenue is an EXACT decimal sum, so sign
     comparisons (and their ties) agree cross-engine by construction."""
-    prep(spark)
     o = load_table(spark, sf_dir, "orders")
     m = (
         o.groupBy(F.date_trunc("month", "o_orderdate").alias("mon"))
@@ -2520,7 +2494,6 @@ def events_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     mean, per-type moments, the running sums themselves) is EXACT —
     Spark evaluates window sums left-to-right but DuckDB merges them
     via segment tree, so even the cumsum must ride on integer units."""
-    prep(spark)
     ev = load_table(spark, sf_dir, "events")
     h = (
         ev.groupBy("event_type", F.date_trunc("hour", "ts").alias("hr"))
@@ -2659,7 +2632,6 @@ def multimodal_shared_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     only their 16-byte hashes enter the shuffle.  The text-as-payload
     oracle twin is ASCII-restricted on both engines (byte slicing vs
     DuckDB char substr — see plans.llm multimodal_frames)."""
-    prep(spark)
     from encodesrv_spark.operators import multimodal
 
     d = load_table(spark, sf_dir, "documents").filter(multimodal.ascii_only_filter())
@@ -2746,7 +2718,6 @@ def source_dup_crosstab(spark: SparkSession, sf_dir: str) -> DataFrame:
     joins the doc→source map twice on doc_id (co-keyed), and the final
     crosstab is a sources²-bounded aggregate.  Pair endpoints are
     source-sorted so each unordered source pair lands in ONE cell."""
-    prep(spark)
     docs = load_table(spark, sf_dir, "documents")
     pairs = dedup.jaccard_pairs(
         docs,
@@ -2789,7 +2760,7 @@ _RANK_TOPN = 200
     "token_rank_stability",
     oracle=f"""
         WITH tok AS (
-            SELECT doc_id, unnest({_TOKS_NE}) AS t FROM documents
+            SELECT doc_id, unnest({TOKS_NE_SQL}) AS t FROM documents
         ),
         c AS (
             SELECT t,
@@ -2847,9 +2818,8 @@ def token_rank_stability(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the unpartitioned windows hold ≤{_RANK_TOPN} rows).  Ranks are
     exact integers with a token tie-break — both the corr-based and
     the closed-form d²-based Spearman are emitted and must agree."""
-    prep(spark)
     d = dedup.fan_out(load_table(spark, sf_dir, "documents"))
-    tok = d.select("doc_id", F.explode(_tokens_ne()).alias("t"))
+    tok = d.select("doc_id", F.explode(tokens_ne()).alias("t"))
     c = tok.groupBy("t").agg(
         F.sum(F.when(F.col("doc_id") % 2 == 0, 1).otherwise(0)).alias("c0"),
         F.sum(F.when(F.col("doc_id") % 2 == 1, 1).otherwise(0)).alias("c1"),
@@ -2959,7 +2929,6 @@ def order_backlog_timeseries(spark: SparkSession, sf_dir: str) -> DataFrame:
     naive alternative — join every order against every month it spans
     — multiplies the fact table by the mean span length; the sweep
     line replaces it with +1/−1 events."""
-    prep(spark)
     o = load_table(spark, sf_dir, "orders")
     l = load_table(spark, sf_dir, "lineitem")
     spans = (
@@ -3004,7 +2973,7 @@ _POS_TOPK = 30
         WITH tok AS (
             SELECT t.doc_id, u.tokk AS t,
                    (u.i - 1) * 1.0 / greatest(len(t.ts) - 1, 1) AS relpos
-            FROM (SELECT doc_id, {_TOKS_NE} AS ts FROM documents) t,
+            FROM (SELECT doc_id, {TOKS_NE_SQL} AS ts FROM documents) t,
                  LATERAL (SELECT unnest(ts) AS tokk,
                                  generate_subscripts(ts, 1) AS i) u
         ),
@@ -3038,9 +3007,8 @@ def token_position_bias(spark: SparkSession, sf_dir: str) -> DataFrame:
     head-anchored terms is a TakeOrdered over the vocab-bounded stats
     frame.  Mean/sd sums are per-token over O(cf) O(1)-magnitude
     terms — 6 dp rounding absorbs association drift."""
-    prep(spark)
     d = dedup.fan_out(load_table(spark, sf_dir, "documents"))
-    toks = d.select("doc_id", _tokens_ne().alias("ts"))
+    toks = d.select("doc_id", tokens_ne().alias("ts"))
     tok = toks.select(
         "doc_id",
         F.posexplode("ts").alias("i", "t"),
@@ -3099,7 +3067,6 @@ def price_benford_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     extracted numerically — floor(x/10^floor(log10 x)) — because
     string renderings of doubles differ across engines.  Everything
     after the count runs on the 9-row frame."""
-    prep(spark)
     o = load_table(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 0)
     d = F.floor(
         F.col("o_totalprice")
@@ -3192,7 +3159,6 @@ def copurchase_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     limbs, which keep the sums exact even at hub degrees a plain LONG
     sum would overflow) through the identical IEEE formula on both
     engines."""
-    prep(spark)
     from encodesrv_spark.plans.extended import _copurchase_edges
 
     e = _copurchase_edges(spark, sf_dir)
@@ -3256,11 +3222,11 @@ _TPL_PREFIX_TOKENS = 5
     oracle=f"""
         WITH pref AS (
             SELECT source,
-                   array_to_string(list_slice({_TOKS_NE}, 1,
+                   array_to_string(list_slice({TOKS_NE_SQL}, 1,
                                               {_TPL_PREFIX_TOKENS}), ' ')
                        AS prefix
             FROM documents
-            WHERE len({_TOKS_NE}) >= {_TPL_PREFIX_TOKENS}
+            WHERE len({TOKS_NE_SQL}) >= {_TPL_PREFIX_TOKENS}
         ),
         c AS (
             SELECT source, prefix, count(*)::BIGINT AS n
@@ -3292,9 +3258,8 @@ def source_template_headers(spark: SparkSession, sf_dir: str) -> DataFrame:
     the count frame, and a per-source argmax window over the
     prefix-cardinality frame.  Ties break on the prefix string, so the
     winner is deterministic cross-engine."""
-    prep(spark)
     d = dedup.fan_out(load_table(spark, sf_dir, "documents"))
-    toks = _tokens_ne()
+    toks = tokens_ne()
     pref = d.filter(F.size(toks) >= _TPL_PREFIX_TOKENS).select(
         "source",
         F.array_join(F.slice(toks, 1, _TPL_PREFIX_TOKENS), " ").alias("prefix"),
@@ -3356,7 +3321,6 @@ def order_fill_latency_sla(spark: SparkSession, sf_dir: str) -> DataFrame:
     latency frame.  Latencies are exact integer days; percentile
     interpolation is the proven `percentile`↔`quantile_cont`
     contract."""
-    prep(spark)
     o = load_table(spark, sf_dir, "orders")
     l = load_table(spark, sf_dir, "lineitem")
     lat = (
@@ -3428,7 +3392,6 @@ def events_dispersion_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     against 1.5 on both engines (the repo-wide round-before-threshold
     rule: comparing the raw ratio would let ~1e-12 cross-engine
     association drift flip the boolean exactly at the boundary)."""
-    prep(spark)
     ev = load_table(spark, sf_dir, "events")
     h = ev.groupBy("event_type", F.date_trunc("hour", "ts").alias("hr")).agg(
         F.count("*").alias("n")
@@ -3540,7 +3503,6 @@ def events_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
     matching corr's null-pair skipping.  The moment→corr arithmetic is
     the identical IEEE double expression on both engines, with the
     zero-variance edge mapped to NULL via nullif like corr itself."""
-    prep(spark)
     ev = load_table(spark, sf_dir, "events")
     h = ev.groupBy("event_type", F.date_trunc("hour", "ts").alias("hr")).agg(
         F.round(exact_sum("value").cast("double") / F.count("*"), 6).alias("m")
@@ -3598,7 +3560,7 @@ _OOV_VOCAB_K = 1000
     "doc_oov_rate",
     oracle=f"""
         WITH tok AS (
-            SELECT doc_id, unnest({_TOKS_NE}) AS t FROM documents
+            SELECT doc_id, unnest({TOKS_NE_SQL}) AS t FROM documents
         ),
         c AS (SELECT t, count(*)::BIGINT AS cnt FROM tok GROUP BY 1),
         vocab AS (
@@ -3630,9 +3592,8 @@ def doc_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast LEFT join on the exploded token stream, aggregated back
     per doc — the token stream shuffles ONCE (the doc_id re-agg), the
     corpus text never."""
-    prep(spark)
     d = dedup.fan_out(load_table(spark, sf_dir, "documents"))
-    tok = d.select("doc_id", F.explode(_tokens_ne()).alias("t"))
+    tok = d.select("doc_id", F.explode(tokens_ne()).alias("t"))
     vocab = (
         tok.groupBy("t")
         .agg(F.count("*").alias("cnt"))
@@ -3700,7 +3661,6 @@ def user_concentration_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact BIGINT moments in ONE aggregate (no per-user share division,
     no broadcast of the totals — the old crossJoin is gone), and the
     single double division is bit-deterministic on both engines."""
-    prep(spark)
     ev = load_table(spark, sf_dir, "events")
     u = ev.groupBy("user_id").agg(F.count("*").alias("n"))
     a = u.agg(
@@ -3738,7 +3698,7 @@ _HEAPS_CHECKPOINTS = 20
                  unnest(generate_series(1, {_HEAPS_CHECKPOINTS})) AS u(i)
         ),
         tok AS (
-            SELECT doc_id, unnest({_TOKS_NE}) AS t FROM documents
+            SELECT doc_id, unnest({TOKS_NE_SQL}) AS t FROM documents
         ),
         first_seen AS (
             SELECT t, min(doc_id) AS first_doc, count(*) AS cf
@@ -3810,9 +3770,8 @@ def heaps_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine-native regr_* would accumulate doubles in merge-order —
     the r04 failure class), with slope/intercept/r2 derived from the
     exact sums via identical IEEE double expressions."""
-    prep(spark)
     d = dedup.fan_out(load_table(spark, sf_dir, "documents"))
-    tok = d.select("doc_id", F.explode(_tokens_ne()).alias("t"))
+    tok = d.select("doc_id", F.explode(tokens_ne()).alias("t"))
     # ONE tokenize pass: both frames derive from the per-(doc, token)
     # count table (first_seen: min doc per token == min doc over the
     # deduped rows; doc_tokens: count(*) over tok == sum(cnt)).  The
@@ -3935,7 +3894,6 @@ def dedup_quality_gain(spark: SparkSession, sf_dir: str) -> DataFrame:
     sums of the 4-dp score (engine-native avg would accumulate doubles
     in merge order — the r04 failure class), rounded 6 dp, and the gain
     derived from the rounded values on both engines."""
-    prep(spark)
     from encodesrv_spark.plans.llm import dedup_clusters, quality_score
 
     comp = dedup_clusters(spark, sf_dir)
@@ -4028,7 +3986,6 @@ def embedding_intrinsic_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranking), per-query top-2 via window, and the estimator is a
     scalar aggregate over {_TWONN_QUERIES} log-ratios.  Zero-distance
     twins are excluded (r₁ > 0 guard on both engines)."""
-    prep(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     e = emb.select("vec_id", _as_double("embedding").alias("emb"))
     q = e.filter(F.col("vec_id") < _TWONN_QUERIES).select(
@@ -4088,7 +4045,7 @@ def embedding_intrinsic_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     "corpus_dataset_card",
     oracle=f"""
         WITH tok AS (
-            SELECT doc_id, unnest({_TOKS_NE}) AS t FROM documents
+            SELECT doc_id, unnest({TOKS_NE_SQL}) AS t FROM documents
         ),
         tstats AS (
             SELECT count(*)::BIGINT AS n_tokens,
@@ -4131,7 +4088,6 @@ def corpus_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     expression) plus an md5-grouped duplicate count; the card row is
     their broadcast product.  Each input pass is map-side-combinable;
     nothing joins at corpus scale."""
-    prep(spark)
     from encodesrv_spark.plans.llm import quality_score
 
     d = dedup.fan_out(load_table(spark, sf_dir, "documents"))
@@ -4141,7 +4097,7 @@ def corpus_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.countDistinct("lang").alias("n_langs"),
         F.countDistinct("source").alias("n_sources"),
     )
-    tok = d.select(F.explode(_tokens_ne()).alias("t"))
+    tok = d.select(F.explode(tokens_ne()).alias("t"))
     tstats = tok.agg(
         F.count("*").alias("n_tokens"),
         F.countDistinct("t").alias("vocab_size"),
@@ -4197,7 +4153,7 @@ _SG_TOPK = 50
 @register(
     "token_skipgram_pmi",
     oracle=f"""
-        WITH toks AS (SELECT doc_id, {_TOKS_NE} AS ts FROM documents),
+        WITH toks AS (SELECT doc_id, {TOKS_NE_SQL} AS ts FROM documents),
         pairs AS (
             SELECT ts[i] AS a, ts[i + k] AS b
             FROM toks,
@@ -4236,9 +4192,8 @@ def token_skipgram_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     marginals and the scalar total, one TakeOrdered top-k.  Window
     pairs are generated by a per-row transform over (offset, position)
     — no self-join, no explode-then-join."""
-    prep(spark)
     d = dedup.fan_out(load_table(spark, sf_dir, "documents"))
-    toks = d.select(_tokens_ne().alias("ts"))
+    toks = d.select(tokens_ne().alias("ts"))
     pair_expr = (
         "flatten(transform(sequence(1, greatest(size(ts) - 1, 1)),"
         f" i -> filter(transform(sequence(1, {_SG_WINDOW}),"
@@ -4334,7 +4289,6 @@ def embedding_distance_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     constant, corpus-size-independent), distances are in-order folds
     rounded before binning, and the equi-width bin edges come from one
     min/max aggregate over the pair frame."""
-    prep(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     e = (
         emb.filter(F.col("vec_id") < _DH_SAMPLE)
@@ -4422,7 +4376,6 @@ def part_supplier_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-deterministic on both engines, and the old per-part totals
     join disappears.  Top-k is a TakeOrdered over the parts-sized
     frame, HHI rounded 6 dp before ranking with a partkey tie-break."""
-    prep(spark)
     l = load_table(spark, sf_dir, "lineitem")
     ps = l.groupBy("l_partkey", "l_suppkey").agg(F.count("*").alias("n"))
     t = F.sum("n").cast("double")
@@ -4489,7 +4442,6 @@ def events_weekend_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB's dayofweek is 0-Sunday..6-Saturday, matching Spark's
     dayofweek()-1 — the weekend predicate is written against each
     engine's own convention and cross-checked by the oracle gate."""
-    prep(spark)
     ev = load_table(spark, sf_dir, "events")
     # Spark dayofweek: 1=Sunday..7=Saturday
     s = (
@@ -4543,15 +4495,15 @@ def events_weekend_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
     "doc_numeric_density",
     oracle=f"""
         SELECT doc_id,
-               len({_TOKS_NE})::BIGINT AS n_tokens,
-               len(list_filter({_TOKS_NE},
+               len({TOKS_NE_SQL})::BIGINT AS n_tokens,
+               len(list_filter({TOKS_NE_SQL},
                    t -> regexp_full_match(t, '[0-9][0-9.,%]*')))::BIGINT
                    AS n_numeric,
-               round(len(list_filter({_TOKS_NE},
+               round(len(list_filter({TOKS_NE_SQL},
                          t -> regexp_full_match(t, '[0-9][0-9.,%]*'))) * 1.0
-                     / len({_TOKS_NE}), 6) AS numeric_density
+                     / len({TOKS_NE_SQL}), 6) AS numeric_density
         FROM documents
-        WHERE len({_TOKS_NE}) > 0
+        WHERE len({TOKS_NE_SQL}) > 0
     """,
     tags=("llm", "quality", "text"),
 )
@@ -4562,9 +4514,8 @@ def doc_numeric_density(spark: SparkSession, sf_dir: str) -> DataFrame:
     teach digit soup).  A pure per-row expression pipeline — zero
     shuffles, whole-stage codegen, pushes down when composed as a
     filter — alongside `gopher_quality_flags` in the gate family."""
-    prep(spark)
     d = dedup.fan_out(load_table(spark, sf_dir, "documents"))
-    toks = _tokens_ne()
+    toks = tokens_ne()
     is_num = lambda t: t.rlike("^[0-9][0-9.,%]*$")  # noqa: E731
     n_tokens = F.size(toks).cast("long")
     n_numeric = F.size(F.filter(toks, is_num)).cast("long")
@@ -4637,7 +4588,6 @@ def part_price_dispersion(spark: SparkSession, sf_dir: str) -> DataFrame:
     derive from those via identical IEEE double ops (the two-pass-free
     sd formula is fine here: it is bit-deterministic, and the audit
     ranks CVs, not 15-digit tails)."""
-    prep(spark)
     l = load_table(spark, sf_dir, "lineitem").filter(F.col("l_quantity") > 0)
     q = (F.col("l_extendedprice") / F.col("l_quantity")).cast("decimal(18,10)")
     moments = (

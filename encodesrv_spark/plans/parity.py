@@ -24,7 +24,6 @@ from encodesrv_spark.catalog import load_table
 from encodesrv_spark.functions import scalars
 from encodesrv_spark.functions.exact import exact_sum, money_round
 from encodesrv_spark.plans.registry import register
-from encodesrv_spark.session import prep
 
 
 # ---------------------------------------------------------------------------
@@ -49,7 +48,6 @@ def poll_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrderedAndProject — per-partition heap top-k then merge, no full
     sort, no full shuffle.  `o_orderkey` tiebreak makes ties
     deterministic (reference relies on Postgres order: SURVEY §7.3.6)."""
-    prep(spark)
     o = load_table(spark, sf_dir, "orders")
     return (
         o.filter(F.col("o_orderstatus") == "O")
@@ -91,7 +89,6 @@ def claim_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     so THAT side carries the broadcast hint and probes partitioned
     customer; nation (constant 25 rows) is also hinted.  Broadcasting
     customer itself would invert the size relationship at 100 TB."""
-    prep(spark)
     o = load_table(spark, sf_dir, "orders")
     c = load_table(spark, sf_dir, "customer")
     n = load_table(spark, sf_dir, "nation")
@@ -129,7 +126,6 @@ def claim_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ownership_like(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Contains / not-contains predicates (P3/P4) — JVM-side `contains`,
     pushed into the scan where the format supports it."""
-    prep(spark)
     d = load_table(spark, sf_dir, "documents")
     return d.filter(
         F.col("text").contains("spark") & ~F.col("text").contains("slow")
@@ -157,7 +153,6 @@ def ownership_like(spark: SparkSession, sf_dir: str) -> DataFrame:
 def status_message(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Filtered COUNT(*) (A1) + disjunctive predicate via isin (P5) +
     pluralization template (F5/F14) — the bot 'status' reply."""
-    prep(spark)
     e = load_table(spark, sf_dir, "events")
     agg = e.filter(F.col("event_type").isin("signup", "error")).agg(
         F.count("*").alias("waiting")
@@ -201,7 +196,6 @@ def coalesce_defaults(spark: SparkSession, sf_dir: str) -> DataFrame:
     (exact_sum), and the no-orders default coalesces in decimal space
     before the one round/cast — NULL-vs-0 and rounding agree with the
     oracle by construction."""
-    prep(spark)
     c = load_table(spark, sf_dir, "customer")
     o = load_table(spark, sf_dir, "orders")
     per_cust = o.groupBy("o_custkey").agg(
@@ -244,7 +238,6 @@ def coalesce_defaults(spark: SparkSession, sf_dir: str) -> DataFrame:
 def path_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mount-prefix rewrite (F1), basename (F2), extension (F3), dirname
     (F4), nice-name template (F5) — all as codegen'd Column expressions."""
-    prep(spark)
     d = load_table(spark, sf_dir, "documents")
     p = d.select(
         "doc_id",
@@ -288,7 +281,6 @@ def template_argv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Conditional arg-template assembly (F6/P8): each fragment is
     emitted only when its parameter is truthy; concat_ws drops the NULL
     fragments exactly like the reference's truthy filter drops args."""
-    prep(spark)
     p = load_table(spark, sf_dir, "part")
     return p.select(
         "p_partkey",
@@ -332,7 +324,6 @@ def template_argv(spark: SparkSession, sf_dir: str) -> DataFrame:
 def loudness_gain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ebur128 loudness regex extract (F8) + 10^((target-I)/20) gain
     (F9), on synthesized ffmpeg-style stderr lines."""
-    prep(spark)
     e = load_table(spark, sf_dir, "events")
     ff = e.filter(F.col("event_type") == "error").select(
         "event_id",
@@ -373,7 +364,6 @@ def loudness_gain(spark: SparkSession, sf_dir: str) -> DataFrame:
 def printf_pattern(spark: SparkSession, sf_dir: str) -> DataFrame:
     """'%05d' thumbnail-sequence detection (F11): rlike + pattern→regex
     rewrite, used by the file-sequence publish sink (S13)."""
-    prep(spark)
     d = load_table(spark, sf_dir, "documents")
     dest = F.when(
         F.col("doc_id") % 3 == 0,
@@ -406,7 +396,6 @@ def printf_pattern(spark: SparkSession, sf_dir: str) -> DataFrame:
 def progress_pct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-group progress ratio (A4) as window functions — the set-
     oriented form of the reference's per-file percent counter."""
-    prep(spark)
     o = load_table(spark, sf_dir, "orders")
     w = W.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     wc = W.partitionBy("o_custkey")
@@ -437,7 +426,6 @@ def running_jobs_list(spark: SparkSession, sf_dir: str) -> DataFrame:
     """collect_list + array_join (A3) with a sort inside the list so the
     aggregation is order-insensitive (distributed collect_list has no
     deterministic order — sort makes it reproducible)."""
-    prep(spark)
     d = load_table(spark, sf_dir, "documents")
     name = F.concat(F.col("source"), F.lit("#"), F.col("doc_id").cast("string"))
     return (
@@ -478,7 +466,6 @@ def crash_reset(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Startup crash recovery (ST5): this server's in-flight, non-Error
     jobs reset to 'Not Encoding'; other servers' rows untouched —
     ownership is the LIKE-substring semantics of P3/P4."""
-    prep(spark)
     e = load_table(spark, sf_dir, "events")
     status = (
         F.when(F.col("event_type") == "error", "srv1 - Error")
@@ -512,7 +499,6 @@ def crash_reset(spark: SparkSession, sf_dir: str) -> DataFrame:
 def pass_explode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bounded per-row pass loop (F18) as explode(sequence(1, pass)) —
     one row per encode pass, fully parallel instead of sequential."""
-    prep(spark)
     p = load_table(spark, sf_dir, "part")
     passes = F.when(F.col("p_size") % 2 == 0, F.lit(2)).otherwise(F.lit(1))
     return p.select(
@@ -539,7 +525,6 @@ def pass_explode(spark: SparkSession, sf_dir: str) -> DataFrame:
 def date_math(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ISO timestamp formatting (F15) + day-delta staleness threshold
     (F16 — the reference's >1-day watchdog generalized)."""
-    prep(spark)
     o = load_table(spark, sf_dir, "orders")
     age = F.datediff(F.lit("1998-12-31").cast("date"), F.col("o_orderdate").cast("date"))
     return o.select(
@@ -576,7 +561,6 @@ def bot_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     IRC/Slack `<@user>: cmd` shape) and pv progress-line digit
     validation (F12) — messages synthesized deterministically from the
     documents table so the oracle sees identical inputs."""
-    prep(spark)
     d = load_table(spark, sf_dir, "documents")
     msgs = d.select(
         "doc_id",

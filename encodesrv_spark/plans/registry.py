@@ -4,7 +4,9 @@ surface.
 Every operator in SURVEY.md §2 (plus the LLM-pipeline extensions) is
 declared here as a named pair:
 
-* a Spark callable ``fn(spark, sf_dir) -> DataFrame`` (the engine), and
+* a Spark callable ``fn(spark, sf_dir) -> DataFrame`` (the engine),
+  which applies :func:`encodesrv_spark.session.prep` to the session
+  before it builds the frame, and
 * an optional ANSI-SQL oracle string DuckDB runs on the same parquet
   tables (the correctness gate).  ``oracle=None`` marks genuinely
   non-SQL-expressible ops (the driver records a weaker rows-only check).
@@ -17,10 +19,13 @@ so both engines agree byte-for-byte.
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+
+from encodesrv_spark.session import prep
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -38,13 +43,24 @@ _REGISTRY: dict[str, Query] = {}
 
 
 def register(name: str, oracle: str | None = None, tags: tuple[str, ...] = ()):
-    """Decorator registering a query under ``name``."""
+    """Decorator registering a query under ``name``.
+
+    It returns (and registers) a wrapper that applies ``prep`` to the
+    session and then calls ``fn``, so every query runs under the
+    engine's session settings whoever built the session.  The wrapper
+    keeps ``fn``'s ``__module__`` and ``__doc__``, which the query index
+    and the per-module bench split read."""
 
     def deco(fn: QueryFn) -> QueryFn:
         if name in _REGISTRY:
             raise ValueError(f"duplicate query name: {name}")
-        _REGISTRY[name] = Query(name, fn, oracle, tuple(tags), (fn.__doc__ or "").strip())
-        return fn
+
+        @functools.wraps(fn)
+        def prepped(spark: SparkSession, sf_dir: str) -> DataFrame:
+            return fn(prep(spark), sf_dir)
+
+        _REGISTRY[name] = Query(name, prepped, oracle, tuple(tags), (fn.__doc__ or "").strip())
+        return prepped
 
     return deco
 

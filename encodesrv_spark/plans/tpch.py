@@ -15,7 +15,6 @@ from pyspark.sql import Window as W
 from encodesrv_spark.catalog import load_table
 from encodesrv_spark.functions.exact import exact_sum, money_round
 from encodesrv_spark.plans.registry import register
-from encodesrv_spark.session import prep
 
 
 def _rev_sum(where=None):
@@ -78,7 +77,6 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     ≤ 10/row, so even the ~6e11-row 100 TB global group sums to ~6e12 —
     six orders inside int64; no limb split needed).  16 → 12 aggregate
     buffers, per-row work for the discount sum down 3× ."""
-    prep(spark)
     l = load_table(spark, sf_dir, "lineitem")
     disc = F.lit(1) - F.col("l_discount")
     tax = F.lit(1) + F.col("l_tax")
@@ -135,7 +133,6 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast at small SF and hash at 100 TB where a forced broadcast
     would OOM. Revenue is rounded BEFORE ranking so the top-k cut is
     deterministic across engines."""
-    prep(spark)
     c = load_table(spark, sf_dir, "customer")
     o = load_table(spark, sf_dir, "orders")
     l = load_table(spark, sf_dir, "lineitem")
@@ -186,7 +183,6 @@ def q5_local_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     Only constant-cardinality nation is hinted broadcast; customer and
     supplier grow with SF, so AQE chooses their join strategy (broadcast
     at test scale, shuffle hash at cluster scale)."""
-    prep(spark)
     c = load_table(spark, sf_dir, "customer")
     o = load_table(spark, sf_dir, "orders")
     l = load_table(spark, sf_dir, "lineitem")
@@ -231,7 +227,6 @@ def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q6 shape: pure scan+filter+global agg — the pushdown
     benchmark. All four predicates reach the parquet reader
     (PushedFilters), only 4 columns are read (ReadSchema)."""
-    prep(spark)
     l = load_table(spark, sf_dir, "lineitem")
     return (
         l.filter(
@@ -266,7 +261,6 @@ def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 def order_priority_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q4 shape: EXISTS as a left-semi join (no row duplication,
     early-out probe), then a tiny aggregation."""
-    prep(spark)
     o = load_table(spark, sf_dir, "orders")
     l = load_table(spark, sf_dir, "lineitem")
     hits = l.filter(F.col("l_quantity") > 45).select("l_orderkey")
@@ -303,7 +297,6 @@ def top_customers_per_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Grouped top-k via row_number window — the distributed
     generalization of the reference's single top-k dequeue (T1→§2.7).
     Ranking happens on the already-aggregated (small) side."""
-    prep(spark)
     c = load_table(spark, sf_dir, "customer")
     o = load_table(spark, sf_dir, "orders")
     n = load_table(spark, sf_dir, "nation")
@@ -342,7 +335,6 @@ def q13_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     outer join would drop customers), then a two-level aggregation.
     First agg keys on c_custkey (pre-shuffled by the join), second is
     a tiny distribution over counts."""
-    prep(spark)
     c = load_table(spark, sf_dir, "customer")
     o = load_table(spark, sf_dir, "orders")
     joined = c.join(
@@ -373,7 +365,6 @@ def customers_no_urgent_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference, supplied here): the probe discards on first match, no
     row duplication, and the filtered orders side stays a fraction of
     the fact table."""
-    prep(spark)
     c = load_table(spark, sf_dir, "customer")
     o = load_table(spark, sf_dir, "orders")
     urgent = o.filter(F.col("o_orderpriority") == "1-URGENT").select("o_custkey")
@@ -405,7 +396,6 @@ def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     Catalyst itself produces for the subquery form.  The per-part avg
     aggregates BEFORE joining (small side), and the brand filter
     prunes the probe early."""
-    prep(spark)
     l = load_table(spark, sf_dir, "lineitem")
     p = load_table(spark, sf_dir, "part")
     avgs = l.groupBy("l_partkey").agg(
@@ -443,7 +433,6 @@ def q18_large_volume_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q18 shape: HAVING over a fact aggregation, then joins —
     the aggregate+filter runs FIRST so only qualifying orderkeys
     (a tiny set) ever join against orders/customer."""
-    prep(spark)
     l = load_table(spark, sf_dir, "lineitem")
     o = load_table(spark, sf_dir, "orders")
     c = load_table(spark, sf_dir, "customer")
@@ -487,7 +476,6 @@ def q7_nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     disjunctive cross-pair predicate.  Both nation aliases broadcast
     (constant 25 rows); customer/supplier are unhinted so AQE sizes
     those joins.  The pair filter applies before the aggregate."""
-    prep(spark)
     l = load_table(spark, sf_dir, "lineitem")
     o = load_table(spark, sf_dir, "orders")
     c = load_table(spark, sf_dir, "customer")
@@ -543,7 +531,6 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     The returnflag filter is pushed to the lineitem scan; nation is
     hinted broadcast, customer left to AQE; final top-k is
     TakeOrderedAndProject over the aggregated (small) set."""
-    prep(spark)
     c = load_table(spark, sf_dir, "customer")
     o = load_table(spark, sf_dir, "orders")
     l = load_table(spark, sf_dir, "lineitem")
@@ -586,7 +573,6 @@ def q12_priority_by_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q12 shape: conditional aggregation (CASE WHEN inside SUM)
     after a fact↔fact join — the pivot-ish counting pattern that stays
     one pass, no separate filtered scans."""
-    prep(spark)
     l = load_table(spark, sf_dir, "lineitem")
     o = load_table(spark, sf_dir, "orders")
     high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
@@ -627,7 +613,6 @@ def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     share).  part is sf-scaled so its join is left to AQE; the month
     filter is pushed to the lineitem scan so the join probe is ~1/80th
     of the fact table."""
-    prep(spark)
     l = load_table(spark, sf_dir, "lineitem")
     p = load_table(spark, sf_dir, "part")
     return (
@@ -671,7 +656,6 @@ def q19_disjunctive_predicate(spark: SparkSession, sf_dir: str) -> DataFrame:
     derives the common single-side implications (brand ∈ {...},
     quantity ∈ [1,40]) and pushes them below the join as scan filters,
     keeping the full disjunction as the residual join predicate."""
-    prep(spark)
     l = load_table(spark, sf_dir, "lineitem")
     p = load_table(spark, sf_dir, "part")
     q = F.col("l_quantity")

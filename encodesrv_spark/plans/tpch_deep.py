@@ -22,7 +22,6 @@ from pyspark.sql import Window as W
 from encodesrv_spark.catalog import load_table
 from encodesrv_spark.functions.exact import _units, exact_sum, money_round
 from encodesrv_spark.plans.registry import register
-from encodesrv_spark.session import prep
 
 
 def _rev_sum(where=None):
@@ -86,7 +85,6 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast hints on the semi-joins — part/supplier are sf-scaled
     (AQE broadcasts them at test scale; at 100 TB they degrade to an
     honest shuffle or a runtime Bloom filter)."""
-    prep(spark)
     l = load_table(spark, sf_dir, "lineitem")
     p = load_table(spark, sf_dir, "part")
     s = load_table(spark, sf_dir, "supplier")
@@ -171,7 +169,6 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffles are lineitem↔orders and the final tiny per-year agg.  The
     share is a conditional-sum / total-sum pair in ONE aggregation pass,
     not two scans."""
-    prep(spark)
     l = load_table(spark, sf_dir, "lineitem")
     o = load_table(spark, sf_dir, "orders")
     c = load_table(spark, sf_dir, "customer")
@@ -242,7 +239,6 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     early; part/supplier joins are unhinted (sf-scaled — AQE sizes
     them), and grouping keys are tiny (nation x year) so the final agg
     is map-side dominated."""
-    prep(spark)
     l = load_table(spark, sf_dir, "lineitem")
     p = load_table(spark, sf_dir, "part")
     s = load_table(spark, sf_dir, "supplier")
@@ -301,7 +297,6 @@ def q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast cross join, NOT a second scan of lineitem.  Values are
     rounded before the threshold compare so both engines cut
     identically."""
-    prep(spark)
     l = load_table(spark, sf_dir, "lineitem")
     s = load_table(spark, sf_dir, "supplier")
     n = load_table(spark, sf_dir, "nation")
@@ -356,7 +351,6 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     1-row broadcast, with the equality compare on EXACT decimal sums.
     Returns ALL suppliers tied at the max (set semantics, no arbitrary
     tiebreak — matches the SQL)."""
-    prep(spark)
     l = load_table(spark, sf_dir, "lineitem")
     s = load_table(spark, sf_dir, "supplier")
     rev = (
@@ -401,7 +395,6 @@ def q16_supplier_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     but still scales with SF); the distinct count
     expands to a two-phase partial/final aggregate keyed on the group
     columns — no global distinct shuffle of the fact table."""
-    prep(spark)
     l = load_table(spark, sf_dir, "lineitem")
     p = load_table(spark, sf_dir, "part")
     s = load_table(spark, sf_dir, "supplier")
@@ -444,7 +437,6 @@ def q20_excess_shippers(spark: SparkSession, sf_dir: str) -> DataFrame:
     suppkey set, and semi-joins against the nation-filtered supplier
     dimension.  Quantities are integral so the HAVING threshold is
     exact in both engines."""
-    prep(spark)
     l = load_table(spark, sf_dir, "lineitem")
     p = load_table(spark, sf_dir, "part")
     s = load_table(spark, sf_dir, "supplier")
@@ -502,7 +494,6 @@ def q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     conditions; all three lineitem sides share the orderkey shuffle key
     so AQE can reuse the exchange.  Strict '>' on shipdate keeps ties
     deterministic across engines."""
-    prep(spark)
     l = load_table(spark, sf_dir, "lineitem")
     o = load_table(spark, sf_dir, "orders")
     s = load_table(spark, sf_dir, "supplier")
@@ -571,7 +562,6 @@ def q22_idle_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     The avg threshold derives from an EXACT decimal sum (order-
     independent), so both engines compute the bit-identical mean and the
     strict inequality cuts identically."""
-    prep(spark)
     c = load_table(spark, sf_dir, "customer")
     o = load_table(spark, sf_dir, "orders")
     avg_bal = c.filter(F.col("c_acctbal") > 0).agg(

@@ -19,9 +19,10 @@ the archives that were on the daemon's path at start.  The daemon is
 imported from the package, so the workers get the package's parent
 directory on their ``PYTHONPATH`` and start from any working
 directory.  Sessions built elsewhere -- the harness hands
-``__spark_entry__`` its own session, normalized by :func:`prep` --
-keep the stock daemon and the floor: the daemon is chosen when the
-context starts and cannot be changed on a running session.
+``__spark_entry__`` its own session, which every registered query
+normalizes with :func:`prep` -- keep the stock daemon and the floor:
+the daemon is chosen when the context starts and cannot be changed on
+a running session.
 """
 
 from __future__ import annotations
@@ -65,7 +66,8 @@ def prep(spark: SparkSession) -> SparkSession:
 
     The driver harness hands us its own SparkSession; the engine's
     semantics (timestamp rendering, adaptive exec) must not depend on
-    who built the session.
+    who built the session.  ``plans.registry.register`` applies this
+    to the session before every registered query builds its frame.
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.adaptive.enabled", "true")

@@ -76,7 +76,7 @@ def test_tokenization_agrees_spark_duckdb():
     cover the edge geometry; exact list equality is asserted."""
     from pyspark.sql import SparkSession
 
-    from encodesrv_spark.plans.corpus import _TOKS_NE, _tokens_ne
+    from encodesrv_spark.functions.text import TOKS_NE_SQL, tokens_ne
 
     spark = SparkSession.getActiveSession() or SparkSession.builder.master(
         "local[2]"
@@ -90,14 +90,14 @@ def test_tokenization_agrees_spark_duckdb():
     df = spark.createDataFrame([(i, t) for i, t in enumerate(cases)], "i long, text string")
     got_spark = {
         r["i"]: list(r["toks"])
-        for r in df.select("i", _tokens_ne().alias("toks")).collect()
+        for r in df.select("i", tokens_ne().alias("toks")).collect()
     }
     con = duckdb.connect()
     con.register("docs_tok", __import__("pandas").DataFrame({"i": range(len(cases)), "text": cases}))
     got_duck = {
         i: list(t)
         for i, t in con.execute(
-            f"SELECT i, {_TOKS_NE} AS t FROM docs_tok"
+            f"SELECT i, {TOKS_NE_SQL} AS t FROM docs_tok"
         ).fetchall()
     }
     assert got_spark == got_duck

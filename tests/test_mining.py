@@ -22,9 +22,9 @@ def test_source_token_kl_nonnegative_and_uniform_corpus_zero(spark, sf_dir):
         [(1, "a b c", "srcX"), (2, "a b", "srcX")], "doc_id long, text string, source string"
     )
     from encodesrv_spark.operators import dedup
-    from encodesrv_spark.plans.corpus import _tokens_ne
+    from encodesrv_spark.functions.text import tokens_ne
 
-    tok = dedup.fan_out(one).select("source", F.explode(_tokens_ne()).alias("t"))
+    tok = dedup.fan_out(one).select("source", F.explode(tokens_ne()).alias("t"))
     c = tok.groupBy("source", "t").agg(F.count("*").cast("double").alias("n"))
     s = c.groupBy("source").agg(F.sum("n").alias("sn"))
     g = c.agg(F.sum("n").alias("tn"))
@@ -45,10 +45,10 @@ def test_bigram_pmi_matches_hand_computation(spark):
     'x y x y' are (x,y),(y,x),(x,y) → c(x,y)=2, c(y,x)=1, N=3.
     PMI(x,y) = log2( (2/3) / ((2/3)*(2/3)) ) = log2(3/2)."""
     from encodesrv_spark.operators import dedup
-    from encodesrv_spark.plans.corpus import _tokens_ne
+    from encodesrv_spark.functions.text import tokens_ne
 
     docs = spark.createDataFrame([(1, "x y x y")], "doc_id long, text string")
-    toks = dedup.fan_out(docs).select(_tokens_ne().alias("ts"))
+    toks = dedup.fan_out(docs).select(tokens_ne().alias("ts"))
     bg = toks.select(
         F.explode(
             F.expr(
@@ -73,9 +73,9 @@ def test_bigram_pmi_single_token_docs_yield_no_pairs(spark):
         [(1, "solo"), (2, ""), (3, "  ")], "doc_id long, text string"
     )
     from encodesrv_spark.operators import dedup
-    from encodesrv_spark.plans.corpus import _tokens_ne
+    from encodesrv_spark.functions.text import tokens_ne
 
-    toks = dedup.fan_out(docs).select(_tokens_ne().alias("ts"))
+    toks = dedup.fan_out(docs).select(tokens_ne().alias("ts"))
     bg = toks.select(
         F.explode(
             F.expr(
@@ -107,9 +107,9 @@ def test_doc_entropy_bounds(spark, sf_dir):
         [(1, "a a a a a")], "doc_id long, text string"
     )
     from encodesrv_spark.operators import dedup
-    from encodesrv_spark.plans.corpus import _tokens_ne
+    from encodesrv_spark.functions.text import tokens_ne
 
-    tok = dedup.fan_out(const).select("doc_id", F.explode(_tokens_ne()).alias("t"))
+    tok = dedup.fan_out(const).select("doc_id", F.explode(tokens_ne()).alias("t"))
     c = tok.groupBy("doc_id", "t").agg(F.count("*").cast("double").alias("n"))
     assert c.count() == 1
 
@@ -495,9 +495,9 @@ def test_burstiness_lower_bound_and_hand_case(spark):
         "doc_id long, text string",
     )
     from encodesrv_spark.operators import dedup
-    from encodesrv_spark.plans.corpus import _tokens_ne
+    from encodesrv_spark.functions.text import tokens_ne
 
-    tok = dedup.fan_out(docs).select("doc_id", F.explode(_tokens_ne()).alias("t"))
+    tok = dedup.fan_out(docs).select("doc_id", F.explode(tokens_ne()).alias("t"))
     c = tok.groupBy("t").agg(
         F.count("*").alias("cf"), F.countDistinct("doc_id").alias("df")
     )

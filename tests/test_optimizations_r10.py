@@ -75,9 +75,10 @@ def test_kmeans_update_last_centroids_are_previous_round(spark, sf_dir):
 
 
 def test_connected_components_pairs_distinct_equivalence(spark):
-    """pairs_distinct=True must label identically to the defensive
-    default — including on graphs with chains (multi-round), isolated
-    cliques, and a duplicate-pair input for the False path."""
+    """connected_components does not de-duplicate its edge list, so an
+    input with duplicated and reversed pairs must label exactly like
+    the clean input — on graphs with chains (multi-round), isolated
+    cliques, and a lone pair — and both must match the ground truth."""
     import random
 
     from encodesrv_spark.operators.dedup import connected_components
@@ -88,22 +89,18 @@ def test_connected_components_pairs_distinct_equivalence(spark):
     pairs += [(a, b) for a in range(20, 24) for b in range(a + 1, 24)]
     pairs += [(40, 41)]
     rng.shuffle(pairs)
-    df = spark.createDataFrame(pairs, "doc_a long, doc_b long")
-    base = sorted(
-        map(tuple, connected_components(df).collect())
-    )
-    fast = sorted(
-        map(tuple, connected_components(df, pairs_distinct=True).collect())
-    )
-    assert base == fast
+    clean = spark.createDataFrame(pairs, "doc_a long, doc_b long")
+    base = sorted(map(tuple, connected_components(clean).collect()))
+    dirty_pairs = pairs + pairs + [(b, a) for a, b in pairs]
+    rng.shuffle(dirty_pairs)
+    dirty = spark.createDataFrame(dirty_pairs, "doc_a long, doc_b long")
+    assert sorted(map(tuple, connected_components(dirty).collect())) == base
     # ground truth: chain -> 0, clique -> 20, pair -> 40
     want = {i: 0 for i in range(10)}
     want |= {i: 20 for i in range(20, 24)}
     want |= {40: 40, 41: 40}
     assert dict(base) == want
-    # the defensive path must still de-duplicate a dirty input
-    dup = spark.createDataFrame(pairs + pairs, "doc_a long, doc_b long")
-    assert sorted(map(tuple, connected_components(dup).collect())) == base
+    assert len(base) == len(want)
 
 
 def test_hashed_shingles_path_is_equivalent(spark, sf_dir):
@@ -150,7 +147,8 @@ def test_ivf_assign_matches_window_reference(spark, sf_dir):
 
     emb = load_table(spark, sf_dir, "embeddings")
     got = sorted(
-        (r["vec_id"], r["cell"]) for r in ivf_assign(emb, n_centroids=16).collect()
+        (r["vec_id"], r["cell"])
+        for r in ivf_assign(_norm_projection(emb), n_centroids=16).collect()
     )
     e = _norm_projection(emb)
     c = e.filter(F.col("vec_id") < 16).select(

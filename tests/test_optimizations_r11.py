@@ -14,7 +14,8 @@ from pyspark.sql import functions as F
 from encodesrv_spark.catalog import load_table
 from encodesrv_spark.functions import hashing as H
 from encodesrv_spark.operators import dedup
-from encodesrv_spark.plans.corpus import _CMS_D, _CMS_W, _tokens_ne
+from encodesrv_spark.functions.text import tokens_ne
+from encodesrv_spark.plans.corpus import _CMS_D, _CMS_W
 
 
 def test_cms_sketch_from_frequency_table_is_equivalent(spark, sf_dir):
@@ -24,7 +25,7 @@ def test_cms_sketch_from_frequency_table_is_equivalent(spark, sf_dir):
     (r, cell, n) rows the direct count over the raw token stream
     produces."""
     toks = dedup.fan_out(load_table(spark, sf_dir, "documents")).select(
-        F.explode(_tokens_ne()).alias("tok")
+        F.explode(tokens_ne()).alias("tok")
     )
     cells = F.array(*[H.seeded_hash64("tok", i) % _CMS_W for i in range(_CMS_D)])
     direct = (

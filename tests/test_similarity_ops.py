@@ -59,6 +59,14 @@ def test_kmeans_partitions_the_corpus(spark, sf_dir):
     assert set(counts) <= set(range(8))
     cents = cent.collect()
     assert all(len(r["cemb"]) == 64 for r in cents)
+    # two well-separated pairs: each point joins its own pair's
+    # centroid, and the result is the (assigned, centroids) 2-tuple
+    vecs = [(0, [0.0, 0.0]), (1, [10.0, 10.0]), (2, [0.0, 0.0]), (3, [10.0, 10.0])]
+    e = spark.createDataFrame(vecs, "vec_id long, embedding array<double>")
+    out = similarity.kmeans(e, k=2, iters=2)
+    assert len(out) == 2
+    got = {r["vec_id"]: r["cid"] for r in out[0].collect()}
+    assert got == {0: 0, 1: 1, 2: 0, 3: 1}
 
 
 def test_doc_chunks_cover_and_overlap(spark):
@@ -112,40 +120,3 @@ def test_cms_estimates_are_one_sided(spark, sf_dir):
     rows = all_queries()["token_cms_topk"].fn(spark, sf_dir).collect()
     assert len(rows) == 20
     assert all(r["cms_n"] >= r["exact_n"] for r in rows)
-
-
-def test_kmeans_converged_input_stops_early(spark):
-    """Run-to-convergence: when the init centroids already ARE the
-    cluster means, centroid shift is 0 after round 1 and the loop must
-    stop there instead of burning the full iteration budget."""
-    vecs = [
-        (0, [0.0, 0.0]),
-        (1, [10.0, 10.0]),
-        (2, [0.0, 0.0]),
-        (3, [10.0, 10.0]),
-    ]
-    e = spark.createDataFrame(vecs, "vec_id long, embedding array<double>")
-    assigned, cent, info = similarity.kmeans(
-        e, k=2, iters=5, tol=1e-9, return_info=True
-    )
-    readout = info.orderBy("iter").collect()
-    assert len(readout) == 1, "converged input must stop after round 1"
-    assert readout[-1]["max_shift"] == 0.0
-    assert readout[-1]["converged"]
-    got = {r["vec_id"]: r["cid"] for r in assigned.collect()}
-    assert got == {0: 0, 1: 1, 2: 0, 3: 1}
-    # fixed-iters mode (the oracle contract) is untouched: 2-tuple, no
-    # early stop bookkeeping
-    out = similarity.kmeans(e, k=2, iters=2)
-    assert len(out) == 2
-
-
-def test_kmeans_unconverged_runs_all_iters(spark):
-    """Moving centroids keep iterating up to the budget, and the
-    readout records one monotone row per executed round."""
-    vecs = [(i, [float(i), 0.0]) for i in range(8)]
-    e = spark.createDataFrame(vecs, "vec_id long, embedding array<double>")
-    _, _, info = similarity.kmeans(e, k=2, iters=3, tol=1e-12, return_info=True)
-    rows = info.orderBy("iter").collect()
-    assert 1 <= len(rows) <= 3
-    assert rows[0]["max_shift"] > 0.0
